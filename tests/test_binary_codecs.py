@@ -4,7 +4,8 @@ The runtime half of the reference's serialization layer
 (serialization/avro_codec.rs:1-1148, protobuf_codec.rs:1-535,
 config/schema_registry.rs:201) — executable here without any connector jar:
 wire-format round-trips, schema evolution (reader/writer resolution),
-decimal logical types, and the Arrow-batched mapInPandas decode paths.
+decimal logical types, and the Spark decode paths (the vectorised Avro
+kernel via mapInArrow, protobuf via mapInPandas).
 """
 
 from __future__ import annotations
@@ -246,7 +247,7 @@ def test_can_read_rules():
 
 
 # ---------------------------------------------------------------------------
-# Spark decode paths (mapInPandas — the scale path)
+# Spark decode paths (mapInArrow / mapInPandas — the scale path)
 # ---------------------------------------------------------------------------
 
 
@@ -281,6 +282,162 @@ def test_df_avro_encode_decode_inverse(spark):
     assert encoded.schema.simpleString() == "struct<value:binary>"
     back = df_decode_avro(encoded, "value", schema).orderBy("k").collect()
     assert [(r.k, r.v) for r in back] == [("a", 1.5), ("b", -2.25)]
+
+
+def _one_field(avro_type):
+    return json.dumps(
+        {"type": "record", "name": "One", "fields": [{"name": "x", "type": avro_type}]}
+    )
+
+
+def _zlong(n):
+    from velostream_spark.sources.avro_binary import _zlong_bytes
+
+    return _zlong_bytes(n)
+
+
+@pytest.mark.parametrize(
+    "avro_type, datum, match",
+    [
+        # an Avro int outside int32 cannot become an IntegerType value
+        ("int", _zlong(2**31), r"2147483648 not in range"),
+        # a decimal wider than the reader's precision
+        (
+            {"type": "bytes", "logicalType": "decimal", "precision": 4, "scale": 2},
+            _zlong(2) + (12345).to_bytes(2, "big", signed=True),
+            r"does not fit in precision 4",
+        ),
+        ("string", _zlong(10) + b"abc", r"EOFError: truncated"),
+        ("string", _zlong(2) + b"\xff\xfe", r"UnicodeDecodeError: 'utf-8'"),
+        # branch 5 of a two-branch union
+        (["null", "long"], _zlong(5) + _zlong(1), r"truncated avro datum|union branch index 5"),
+    ],
+)
+def test_df_decode_avro_fails_loudly(spark, avro_type, datum, match):
+    """Values Spark cannot hold, or bytes that are not a datum of the
+    schema, fail the job with the cause in its message — never a null or
+    a wrapped-around value."""
+    df = spark.createDataFrame([(datum, 1)], "value binary, k int")
+    with pytest.raises(Exception, match=match):
+        df_decode_avro(df, "value", _one_field(avro_type)).collect()
+
+
+def test_df_decode_avro_timestamps_are_utc_instants(spark):
+    """An Avro timestamp is a UTC instant: the decoded value does not move
+    with the session time zone."""
+    schema = _one_field({"type": "long", "logicalType": "timestamp-micros"})
+    df = spark.createDataFrame(
+        [(AvroBinaryCodec(schema).encode({"x": 1_000_000}),)], "value binary"
+    )
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        got = df_decode_avro(df, "value", schema).select(F.unix_micros("x")).first()[0]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert got == 1_000_000
+
+
+def test_df_encode_writes_timestamps_as_utc_instants(spark, tmp_path):
+    """Both encoders write a timestamp as the UTC instant it holds, in any
+    session time zone: the wire carries the instant, and encode → decode
+    gives it back, top-level and nested, plain and Confluent-framed."""
+    from velostream_spark.sources.schema_registry import (
+        df_decode_confluent,
+        df_encode_confluent,
+        unframe_value,
+    )
+
+    ts = {"type": "long", "logicalType": "timestamp-micros"}
+    schema = json.dumps(
+        {
+            "type": "record",
+            "name": "T",
+            "fields": [
+                {"name": "k", "type": "long"},
+                {"name": "t", "type": ts},
+                {"name": "s", "type": {"type": "record", "name": "S",
+                                       "fields": [{"name": "u", "type": ts}]}},
+                {"name": "a", "type": {"type": "array", "items": ts}},
+            ],
+        }
+    )
+    FileSchemaRegistry(tmp_path / "reg").register("t-value", schema)
+    micros = [1_000_000, 1_719_835_200_000_000]  # EST and EDT in New York
+    epoch = dt.datetime(1970, 1, 1)
+    want = [(m, m + 1, [m + 2]) for m in micros]
+    codec = AvroBinaryCodec(schema)
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        src = spark.sql(
+            "SELECT k, timestamp_micros(m) AS t,"
+            " named_struct('u', timestamp_micros(m + 1)) AS s,"
+            " array(timestamp_micros(m + 2)) AS a"
+            f" FROM VALUES (0, {micros[0]}L), (1, {micros[1]}L) AS v(k, m)"
+        )
+        plain = df_encode_avro(src, schema)
+        framed = df_encode_confluent(src, str(tmp_path / "reg"), "t-value")
+        wire = sorted(
+            (codec.decode(r.value) for r in plain.collect()), key=lambda r: r["k"]
+        )
+        assert [r["t"] for r in wire] == [epoch + dt.timedelta(microseconds=m) for m in micros]
+        wire = [codec.decode(unframe_value(r.value)[1])["t"] for r in framed.collect()]
+        assert sorted(wire) == [epoch + dt.timedelta(microseconds=m) for m in micros]
+        for decoded in (
+            df_decode_avro(plain, "value", schema),
+            df_decode_confluent(framed, str(tmp_path / "reg"), "t-value"),
+        ):
+            got = decoded.orderBy("k").select(
+                F.unix_micros("t"),
+                F.unix_micros("s.u"),
+                F.transform("a", lambda v: F.unix_micros(v)),
+            )
+            assert [tuple(r) for r in got.collect()] == want
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def test_df_decode_null_values_and_passthrough(spark, tmp_path):
+    """Kafka tombstones (null values) decode to null record fields on both
+    decode paths; key and topic columns pass through unchanged."""
+    from velostream_spark.sources.schema_registry import (
+        df_decode_confluent,
+        frame_value,
+    )
+
+    codec = AvroBinaryCodec(WRITER_V1)
+    recs = _orders(4)
+    values = [codec.encode(r) for r in recs]
+    values[1] = values[3] = None
+    rows = [(v, f"k{i}".encode(), "orders") for i, v in enumerate(values)]
+    schema = "value binary, key binary, topic string"
+    fields = ["order_id", "symbol", "qty", "price", "ts", "venue"]
+
+    out = df_decode_avro(
+        spark.createDataFrame(rows, schema), "value", WRITER_V1, READER_V2
+    ).orderBy("key")
+    assert out.columns == fields + ["key", "topic"]
+
+    reg = FileSchemaRegistry(tmp_path / "reg")
+    reg.register("orders-value", WRITER_V1)
+    reg.register("orders-value", READER_V2)
+    sid = reg.schema_id("orders-value", 1)
+    framed = [(None if v is None else frame_value(sid, v), k, t) for v, k, t in rows]
+    conf = df_decode_confluent(
+        spark.createDataFrame(framed, schema), str(tmp_path / "reg"), "orders-value"
+    ).orderBy("key")
+    assert conf.columns == fields + ["key", "topic"]
+
+    for got in (out.collect(), conf.collect()):
+        assert [(bytes(r.key), r.topic) for r in got] == [
+            (f"k{i}".encode(), "orders") for i in range(4)
+        ]
+        for i in (1, 3):
+            assert all(got[i][f] is None for f in fields)
+        for i in (0, 2):
+            assert got[i].order_id == i and got[i].venue == "NASDAQ"
+            assert got[i].price == recs[i]["price"] and got[i].ts == recs[i]["ts"]
 
 
 def test_df_protobuf_decode(spark):

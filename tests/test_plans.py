@@ -209,6 +209,60 @@ def test_codec_roundtrips_fused_single_python_stage(spark):
         assert "RoundRobinPartitioning" in plan, (name, plan)
 
 
+def test_streaming_avro_source_decodes_in_one_arrow_stage(spark, tmp_path):
+    """A streaming avro file_source decodes through the vectorised Avro
+    kernel: the executed micro-batch plan has exactly one MapInArrow node
+    and no MapInPandas (the per-record pandas path)."""
+    import json
+    import re
+
+    import pandas as pd
+
+    from velostream_spark.sources.avro_binary import AvroBinaryCodec
+    from velostream_spark.sources.schema_registry import FileSchemaRegistry
+    from velostream_spark.sql.engine import SqlEngine
+
+    schema = json.dumps(
+        {
+            "type": "record",
+            "name": "Reading",
+            "fields": [
+                {"name": "sensor", "type": "string"},
+                {"name": "temp", "type": "double"},
+            ],
+        }
+    )
+    FileSchemaRegistry(tmp_path / "reg").register("readings-value", schema)
+    codec = AvroBinaryCodec(schema)
+    (tmp_path / "in").mkdir()
+    pd.DataFrame(
+        {"value": [codec.encode({"sensor": s, "temp": 1.5}) for s in "abc"]}
+    ).to_parquet(tmp_path / "in" / "part-0.parquet", index=False)
+    eng = SqlEngine(spark)
+    job = eng.execute_streaming(
+        f"""
+        CREATE STREAM avro_plan_pin AS
+        SELECT sensor, temp FROM readings WHERE temp > 0
+        WITH ('readings.type' = 'file_source',
+              'readings.path' = '{tmp_path / "in"}',
+              'readings.format' = 'avro',
+              'readings.avro.schema.registry.path' = '{tmp_path / "reg"}',
+              'readings.avro.schema.subject' = 'readings-value',
+              'avro_plan_pin.type' = 'file_sink',
+              'avro_plan_pin.path' = '{tmp_path / "out"}',
+              'avro_plan_pin.format' = 'parquet')
+        """
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        job.query.explain()
+    eng.jobs.stop("avro_plan_pin")
+    plan = buf.getvalue()
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    assert "MapInPandas" not in plan, plan
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 3
+
+
 def test_union_all_distinct_prunes_scans(spark):
     plan = plan_of(spark, "union_all_distinct")
     assert "Union" in plan, plan

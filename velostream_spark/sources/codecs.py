@@ -9,14 +9,15 @@ Spark-native mapping:
   `decode_avro`/`encode_avro` use the connector's `from_avro`/`to_avro`
   (JVM-side, preferred on a real cluster). Without it — this environment
   ships no connector jar and has no network — `avro_binary.df_decode_avro`
-  / `df_encode_avro` implement the public Avro binary spec in pure Python,
-  Arrow-batched through `mapInPandas`, including decimal logical types and
-  reader/writer schema resolution (the reference's schema-evolution
-  contract). The schema-mapping half (Avro JSON schema → Spark types,
+  / `df_encode_avro` implement the public Avro binary spec in Python,
+  including decimal logical types and reader/writer schema resolution (the
+  reference's schema-evolution contract). Decode is vectorised: a numpy
+  kernel over each Arrow batch via `mapInArrow`; encode stays per record
+  via `mapInPandas`. The schema-mapping half (Avro JSON schema → Spark types,
   `decimal` → DecimalType — the ScaledInteger-parity path) lives below.
 - Protobuf: same split — `from_protobuf`/`to_protobuf` when spark-protobuf
   is present; `proto_binary.df_decode_protobuf` (pure-Python wire-format
-  codec + minimal .proto parser) otherwise.
+  codec + minimal .proto parser, per record via `mapInPandas`) otherwise.
 - Schema registry: `schema_registry.FileSchemaRegistry` resolves
   subject/version pairs and feeds the Avro paths
   (`schema_registry.decode_with_registry`).
@@ -173,12 +174,14 @@ def encode_protobuf(data: Column, message_name: str, desc_file_path: str) -> Col
 
 def _gate_msg(pkg: str) -> str:
     fallback = (
+        "vectorised mapInArrow fallback "
         "velostream_spark.sources.avro_binary.df_decode_avro"
         if "avro" in pkg
-        else "velostream_spark.sources.proto_binary.df_decode_protobuf"
+        else "pure-Python mapInPandas fallback "
+        "velostream_spark.sources.proto_binary.df_decode_protobuf"
     )
     return (
         f"{pkg} connector is not on the classpath; launch with "
         f"--packages org.apache.spark:{pkg}_2.13:<spark-version>, or use the "
-        f"pure-Python Arrow-batched fallback {fallback}"
+        f"{fallback}"
     )

@@ -9,10 +9,10 @@ same subject/version model as Confluent's registry, kept on the filesystem
 so it works in air-gapped environments; at scale the root lives on shared
 storage (HDFS/S3 via a mounted path) and reads are cached per-session.
 
-Feeds the pure-Python Avro codec (`avro_binary`): ``decode_with_registry``
-resolves the writer's schema version and the latest (or pinned) reader
-version and hands both to the Arrow-batched ``df_decode_avro`` — giving
-schema-evolution decode end-to-end without any connector jar.
+Feeds the Avro codec (`avro_binary`): ``decode_with_registry`` resolves the
+writer's schema version and the latest (or pinned) reader version and hands
+both to ``df_decode_avro`` (the vectorised batch kernel via ``mapInArrow``) —
+giving schema-evolution decode end-to-end without any connector jar.
 
 WITH-clause keys honored (mirroring the reference's source config surface):
 ``avro.schema.registry.path``, ``avro.schema.subject``,
@@ -31,6 +31,7 @@ mixed-version records and still decode to the reader's shape.
 
 from __future__ import annotations
 
+import functools
 import json
 import struct
 from pathlib import Path
@@ -270,7 +271,7 @@ def df_encode_confluent(
 
     from pyspark.sql.types import BinaryType, StructField, StructType
 
-    from .avro_binary import AvroBinaryCodec, _py
+    from .avro_binary import AvroBinaryCodec, _py, _timestamps_to_utc
 
     registry = FileSchemaRegistry(registry_path)
     writer_json = registry.get_schema(subject, version)
@@ -279,10 +280,12 @@ def df_encode_confluent(
     head = bytes((CONFLUENT_MAGIC,)) + _ID_STRUCT.pack(schema_id)
     passthrough = list(passthrough_cols or [])
     data_cols = [c for c in df.columns if c not in passthrough]
+    to_utc = _timestamps_to_utc(df, data_cols)
 
     def gen(batches):
         codec = AvroBinaryCodec(writer_json)
         for pdf in batches:
+            pdf = to_utc(pdf)
             vals = [
                 head + codec.encode({k: _py(v) for k, v in zip(data_cols, row)})
                 for row in pdf[data_cols].itertuples(index=False, name=None)
@@ -299,6 +302,17 @@ def df_encode_confluent(
     return df.mapInPandas(gen, schema=StructType(out_fields))
 
 
+def _confluent_ids(frames):
+    """Confluent frames (rows × 5 uint8: magic byte, big-endian id) → the
+    global schema id of each row; the magic byte is checked."""
+    import numpy as np
+
+    bad = frames[:, 0] != CONFLUENT_MAGIC
+    if bad.any():
+        raise ValueError(f"bad magic byte 0x{frames[bad][0, 0]:02x} (expected 0x00)")
+    return np.ascontiguousarray(frames[:, 1:]).view(">u4").ravel()
+
+
 def df_decode_confluent(
     df,
     registry_path: str,
@@ -307,55 +321,45 @@ def df_decode_confluent(
     value_col: str = "value",
 ):
     """Decode Confluent-framed Avro values: per-record writer schema
-    resolved from the frame's global id (codecs cached per id inside the
+    resolved from the frame's global id (looked up once per id inside the
     Arrow stage), all records projected to the READER schema's shape
     (``reader_subject``/``reader_version``, default latest) via Avro schema
-    resolution — mixed-version topics decode in one pass."""
-    import pandas as pd
+    resolution — mixed-version topics decode in one pass. A null value
+    gives null record fields; the other input columns pass through."""
+    from pyspark.sql.types import StructType
 
-    from pyspark.sql.types import StructField, StructType
-
-    from .avro_binary import AvroBinaryCodec
-    from .codecs import avro_to_spark_type
+    from .avro_binary import (
+        SPARK_TZ,
+        _decoded_record_batch,
+        _spark_fields,
+        decode_framed_batch,
+    )
 
     registry = FileSchemaRegistry(registry_path)
     reader_json = registry.get_schema(reader_subject, reader_version)
-    reader = json.loads(reader_json)
-    fields = [f["name"] for f in reader["fields"]]
-    out_fields = [
-        StructField(f["name"], avro_to_spark_type(f["type"]), nullable=True)
-        for f in reader["fields"]
-    ]
     passthrough = [f for f in df.schema.fields if f.name != value_col]
-    schema = StructType(out_fields + passthrough)
+    schema = StructType(_spark_fields(json.loads(reader_json)) + passthrough)
+    frame_size = 1 + _ID_STRUCT.size
 
     def gen(batches):
         reg = FileSchemaRegistry(registry_path)
-        codecs: dict[int, AvroBinaryCodec] = {}
-        for pdf in batches:
-            records = []
-            for v in pdf[value_col]:
-                if v is None:
-                    records.append(None)
-                    continue
-                sid, payload = unframe_value(v)
-                codec = codecs.get(sid)
-                if codec is None:
-                    _, _, writer_json = reg.get_by_id(sid)
-                    codec = AvroBinaryCodec(writer_json, reader_json)
-                    codecs[sid] = codec
-                records.append(codec.decode(payload))
-            cols = {
-                f: [None if r is None else r.get(f) for r in records]
-                for f in fields
-            }
-            out = pd.DataFrame(cols)
-            for c in pdf.columns:
-                if c != value_col:
-                    out[c] = pdf[c].values
-            yield out
 
-    return df.mapInPandas(gen, schema=schema)
+        @functools.lru_cache(maxsize=None)
+        def writer_json(sid: int) -> str:
+            return reg.get_by_id(sid)[2]
+
+        for batch in batches:
+            rec = decode_framed_batch(
+                batch.column(value_col),
+                frame_size,
+                _confluent_ids,
+                writer_json,
+                reader_json,
+                SPARK_TZ,
+            )
+            yield _decoded_record_batch(batch, value_col, rec)
+
+    return df.mapInArrow(gen, schema=schema)
 
 
 def decode_with_registry(df, cfg: dict[str, str], value_col: str = "value"):

@@ -2606,7 +2606,7 @@ class SqlEngine:
                     )
                 elif fmt in ("avro", "protobuf"):
                     # stream the RAW binary-value parquet, decode in-stream
-                    # (mapInPandas works on streaming plans); batch.schema
+                    # (Arrow map stages work on streaming plans); batch.schema
                     # here is the DECODED shape — the raw one is just value
                     from pyspark.sql.types import (
                         BinaryType,
