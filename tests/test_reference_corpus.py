@@ -22,6 +22,7 @@ Notable corpus quirks (all handled, see dialect.py):
 """
 
 import glob
+import os
 import signal
 
 import pytest
@@ -33,8 +34,22 @@ CORPUS = sorted(
     + glob.glob("/root/reference/examples/*.sql")
 )
 
+# The corpus tests need the reference checkout; the dialect tests below
+# do not, so the skip sits on those two tests, not on the module.
+needs_corpus = pytest.mark.skipif(
+    not (
+        os.path.isdir("/root/reference/demo")
+        and os.path.isdir("/root/reference/examples")
+    ),
+    reason="reference SQL corpus not present "
+    "(/root/reference/demo and /root/reference/examples)",
+)
 
-@pytest.mark.parametrize("path", CORPUS, ids=lambda p: p.rsplit("/", 2)[-1])
+
+# ids as a list: an ids callable would be handed pytest's NOTSET sentinel
+# for an empty parameter set and fail collection of the whole module.
+@needs_corpus
+@pytest.mark.parametrize("path", CORPUS, ids=[p.rsplit("/", 2)[-1] for p in CORPUS])
 def test_reference_sql_file_parses(path):
     with open(path) as fh:
         sql = fh.read()
@@ -58,6 +73,7 @@ def test_reference_sql_file_parses(path):
         signal.alarm(0)
 
 
+@needs_corpus
 def test_corpus_is_nonempty():
     # 28 files at the time of writing; guard against a silently-empty glob
     assert len(CORPUS) >= 20

@@ -33,6 +33,7 @@ import pytest
 
 REF_QUICKSTART = "/root/reference/demo/quickstart"
 REF_1BRC = "/root/reference/demo/1brc"
+REF_1BRC_GEN = "/root/reference/src/bin/velo-1brc.rs"
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(REF_QUICKSTART), reason="reference demos not present"
@@ -186,12 +187,16 @@ def _stations() -> list[tuple[str, float]]:
     """The public-1BRC station list (name, mean °C) shipped in the
     reference's generator (src/bin/velo-1brc.rs STATIONS — data from the
     original public One Billion Row Challenge)."""
-    src = open(os.path.join("/root/reference/src/bin/velo-1brc.rs")).read()
+    src = open(REF_1BRC_GEN).read()
     body = src.split("STATIONS", 1)[1]
     out = re.findall(r'\("([^"]+)",\s*(-?\d+(?:\.\d+)?)\)', body)
     return [(name, float(mean)) for name, mean in out]
 
 
+@pytest.mark.skipif(
+    not (os.path.isfile(REF_1BRC_GEN) and os.path.isfile(os.path.join(REF_1BRC, "1brc.sql"))),
+    reason=f"reference 1BRC files not present ({REF_1BRC_GEN}, {REF_1BRC}/1brc.sql)",
+)
 def test_1brc_golden(tmp_path, monkeypatch, spark):
     """demo/1brc/1brc.sql executed verbatim against generator-protocol data;
     spec assertions (test_spec.yaml): output exists, one row per station
