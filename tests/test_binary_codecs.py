@@ -244,6 +244,18 @@ def test_can_read_rules():
     assert can_read('"long"', '"int"')  # promotion
     assert not can_read('"int"', '"long"')  # demotion is not allowed
     assert can_read('["null", "string"]', '"string"')  # union widening
+    assert not can_read('"long"', '["null", "long"]')  # a writer branch it lacks
+    no_default = json.loads(READER_V2)
+    del no_default["fields"][-1]["default"]
+    assert not can_read(json.dumps(no_default), WRITER_V1)
+
+    def named(kind, **kw):
+        return json.dumps(dict(type=kind, name="N", **kw))
+
+    assert can_read(named("enum", symbols=["C", "B", "A"]), named("enum", symbols=["A", "B"]))
+    assert not can_read(named("enum", symbols=["A"]), named("enum", symbols=["A", "B"]))
+    assert can_read(named("fixed", size=4), named("fixed", size=4))
+    assert not can_read(named("fixed", size=8), named("fixed", size=4))
 
 
 # ---------------------------------------------------------------------------
@@ -398,6 +410,41 @@ def test_df_encode_writes_timestamps_as_utc_instants(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", old)
 
 
+def test_df_encode_null_timestamp_in_nullable_union(spark, tmp_path):
+    """A null in a nullable timestamp-micros column round-trips through
+    both encoders as the union's null branch, beside a non-null instant."""
+    from velostream_spark.sources.schema_registry import (
+        df_decode_confluent,
+        df_encode_confluent,
+    )
+
+    schema = json.dumps(
+        {
+            "type": "record",
+            "name": "N",
+            "fields": [
+                {"name": "k", "type": "long"},
+                {"name": "t", "type": ["null", {"type": "long", "logicalType": "timestamp-micros"}]},
+            ],
+        }
+    )
+    FileSchemaRegistry(tmp_path / "reg").register("n-value", schema)
+    src = spark.sql(
+        "SELECT k, IF(k = 0, NULL, timestamp_micros(1719835200000000)) AS t"
+        " FROM VALUES (0L), (1L) AS v(k)"
+    )
+    for decoded in (
+        df_decode_avro(df_encode_avro(src, schema), "value", schema),
+        df_decode_confluent(
+            df_encode_confluent(src, str(tmp_path / "reg"), "n-value"),
+            str(tmp_path / "reg"),
+            "n-value",
+        ),
+    ):
+        got = decoded.orderBy("k").select("k", F.unix_micros("t")).collect()
+        assert [tuple(r) for r in got] == [(0, None), (1, 1_719_835_200_000_000)]
+
+
 def test_df_decode_null_values_and_passthrough(spark, tmp_path):
     """Kafka tombstones (null values) decode to null record fields on both
     decode paths; key and topic columns pass through unchanged."""
@@ -498,3 +545,7 @@ def test_multi_branch_union_constructs_and_roundtrips():
         assert codec.decode(codec.encode(rec)) == rec
     with pytest.raises(ValueError, match="no branch"):
         codec.encode({"a": 1.5, "b": 1})
+    # Spark's Arrow batches hand a map over as its (key, value) pairs
+    maps = AvroBinaryCodec(json.dumps({"type": "record", "name": "M", "fields": [
+        {"name": "m", "type": ["null", "string", {"type": "map", "values": "long"}]}]}))
+    assert maps.decode(maps.encode({"m": [("k", 1)]})) == {"m": {"k": 1}}

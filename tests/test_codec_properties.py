@@ -342,6 +342,52 @@ def test_batch_decode_evolution_matches_codec(recs):
     _assert_batch_matches_codec([codec.encode(r) for r in recs], EVOLVE_WRITER, EVOLVE_READER)
 
 
+def test_evolution_resolves_to_hand_written_values():
+    """Fixed EVOLVE_WRITER datums, written byte by byte, decode into
+    EVOLVE_READER as the values below on both backends. The property tests
+    compare the backends with each other; this pins each rule of schema
+    resolution to a value worked out from the spec."""
+    z = _zlong_bytes
+    datums = [
+        z(7)  # id
+        + z(3) + z(0) + z(1) + _str_bytes("x") + z(2) + z(5) + z(0)  # gone: null, "x", 5
+        + z(-3)  # i2l
+        + z(2**53 + 1)  # l2d: rounds to the nearest double
+        + z(1) + z(-4)  # i2d: int branch
+        + z(1) + z(12)  # multi: int branch
+        + z(0)  # e: "A"
+        + _str_bytes("hé"),  # s2b
+        z(-1)
+        + z(-2) + z(4) + z(1) + _str_bytes("y") + z(0) + z(0)  # gone: sized block
+        + z(2**31 - 1)
+        + z(-5)
+        + z(0)  # i2d: null
+        + z(2) + z(2**40)  # multi: long branch
+        + z(1)  # e: "B"
+        + _str_bytes(""),
+        z(0) + z(0) + z(0) + z(0) + z(0) + z(0) + z(0) + _str_bytes("b"),
+    ]
+    defaults = {
+        "added": "dflt",
+        "added_opt": None,
+        "added_dec": decimal.Decimal("2.56"),  # "\u0001\u0000": unscaled 256
+        "added_day": dt.date(2022, 1, 8),  # day 19000
+    }
+    want = [
+        dict(id=7, i2l=-3, l2d=9007199254740992.0, i2d=-4.0, multi=12, e="A",
+             s2b=b"h\xc3\xa9", **defaults),
+        dict(id=-1, i2l=2147483647, l2d=-5.0, i2d=None, multi=1099511627776, e="B",
+             s2b=b"", **defaults),
+        dict(id=0, i2l=0, l2d=0.0, i2d=None, multi=None, e="A", s2b=b"b", **defaults),
+    ]
+    codec = AvroBinaryCodec(EVOLVE_WRITER, EVOLVE_READER)
+    assert [codec.decode(d) for d in datums] == want
+    got = decode_avro_batch(pa.array(datums, pa.binary()), EVOLVE_WRITER, EVOLVE_READER)
+    assert got.to_pylist() == want
+    for v in want:
+        assert isinstance(v["l2d"], float) and isinstance(v["i2l"], int)
+
+
 def test_batch_decode_skewed_arrays_and_repeated_map_keys():
     """One row with a long array among short ones, and maps whose keys
     repeat across blocks: the same values as the codec, each repeated key

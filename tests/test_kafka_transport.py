@@ -133,7 +133,7 @@ def test_avro_value_pipeline_with_registry(spark, tmp_path):
     out = decode_avro_value(raw, cfg).orderBy("order_id")
     rows = out.collect()
     assert [(r.order_id, r.symbol) for r in rows] == [(i, f"S{i}") for i in range(4)]
-    # system columns pass through the mapInPandas decode
+    # system columns pass through the mapInArrow decode
     assert rows[2]._key == "k2" and rows[2]._offset == 2
 
 

@@ -201,12 +201,51 @@ def test_merged_subquery_entries_keep_broadcast_shapes(spark):
 
 def test_codec_roundtrips_fused_single_python_stage(spark):
     """Codec entries must run encode→decode in ONE Arrow stage (one
-    mapInPandas node), after one round-robin repartition — two Python
-    stages or a missing repartition re-opens the r3 bottleneck."""
-    for name in ("protobuf_roundtrip", "avro_roundtrip"):
+    mapInPandas node for protobuf, one mapInArrow node for Avro), after one
+    round-robin repartition — two Python stages or a missing repartition
+    re-opens the r3 bottleneck."""
+    for name, node in (("protobuf_roundtrip", "MapInPandas"), ("avro_roundtrip", "MapInArrow")):
         plan = plan_of(spark, name)
-        assert _nodes(plan, "MapInPandas") == 1, (name, plan)
+        assert _nodes(plan, node) == 1, (name, plan)
+        assert _nodes(plan, "MapInPandas") + _nodes(plan, "MapInArrow") == 1, (name, plan)
         assert "RoundRobinPartitioning" in plan, (name, plan)
+
+
+def test_avro_encoders_run_in_one_arrow_stage(spark, tmp_path):
+    """df_encode_avro, df_encode_confluent and df_roundtrip_avro each run
+    as exactly one MapInArrow node and no MapInPandas."""
+    import json
+    import re
+
+    from velostream_spark.sources.avro_binary import df_encode_avro, df_roundtrip_avro
+    from velostream_spark.sources.schema_registry import (
+        FileSchemaRegistry,
+        df_encode_confluent,
+    )
+
+    schema = json.dumps(
+        {
+            "type": "record",
+            "name": "K",
+            "fields": [
+                {"name": "k", "type": "long"},
+                {"name": "t", "type": ["null", {"type": "long", "logicalType": "timestamp-micros"}]},
+            ],
+        }
+    )
+    FileSchemaRegistry(tmp_path / "reg").register("k-value", schema)
+    src = spark.range(3).selectExpr("id AS k", "timestamp_micros(id) AS t")
+    for df in (
+        df_encode_avro(src, schema),
+        df_encode_confluent(src, str(tmp_path / "reg"), "k-value"),
+        df_roundtrip_avro(src, schema),
+    ):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain()
+        plan = buf.getvalue()
+        assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+        assert "MapInPandas" not in plan, plan
 
 
 def test_streaming_avro_source_decodes_in_one_arrow_stage(spark, tmp_path):

@@ -35,7 +35,8 @@ REF_QUICKSTART = "/root/reference/demo/quickstart"
 REF_1BRC = "/root/reference/demo/1brc"
 REF_1BRC_GEN = "/root/reference/src/bin/velo-1brc.rs"
 
-pytestmark = pytest.mark.skipif(
+#: the quickstart tests copy their inputs from the reference demo
+needs_quickstart = pytest.mark.skipif(
     not os.path.isdir(REF_QUICKSTART), reason="reference demos not present"
 )
 
@@ -117,6 +118,7 @@ def _run_demo(engine, sql_file: str):
         return engine.execute(fh.read())
 
 
+@needs_quickstart
 def test_hello_world_matches_shipped_expected(quickstart):
     """hello_world.sql vs the SHIPPED hello_world_expected.csv
     (test_spec.yaml: 5 rows, file_matches ignore_order=false)."""
@@ -127,6 +129,7 @@ def test_hello_world_matches_shipped_expected(quickstart):
     _assert_matches(rows, expected, ignore_order=False)
 
 
+@needs_quickstart
 def test_01_filter(quickstart):
     """01_filter.sql: 3 rows (Bob, Dave, Eve) — spec file_row_count +
     file_contains mode=all."""
@@ -136,6 +139,7 @@ def test_01_filter(quickstart):
     _assert_contains(rows, "name", ["Bob", "Dave", "Eve"])
 
 
+@needs_quickstart
 def test_02_transform(quickstart):
     """02_transform.sql: 5 rows, name_upper = UPPER(name) for all five."""
     _run_demo(quickstart, "02_transform.sql")
@@ -146,6 +150,7 @@ def test_02_transform(quickstart):
     assert _norm(by_id["2"]["doubled_value"]) == 400  # Bob 200*2
 
 
+@needs_quickstart
 def test_03_aggregate_emit_changes_cadence(quickstart):
     """03_aggregate.sql (CREATE TABLE ... GROUP BY ... EMIT CHANGES): the
     spec pins 8 output rows for 8 input records — the reference emits the
@@ -165,6 +170,7 @@ def test_03_aggregate_emit_changes_cadence(quickstart):
     assert eng.tables["category_stats"].count() == 3
 
 
+@needs_quickstart
 def test_04_window_lag(quickstart):
     """04_window.sql: LAG over ROWS WINDOW BUFFER — 8 rows, both symbols,
     first row per symbol has empty previous_price, change = cur - prev."""

@@ -2,12 +2,13 @@
 codecs (serialization/avro_codec.rs, protobuf_codec.rs) proven inside the
 correctness gate.
 
-Each entry encodes real table rows to wire bytes IN-PLAN (mapInPandas),
-decodes them back, and aggregates the decoded columns; the DuckDB oracle
-computes the same aggregate over the raw table. A codec bug anywhere —
-varint edges, zigzag signs, decimal scaling, union branches, field order —
-changes the decoded values and breaks the value hash. The encode→decode
-pair rides one pipeline (two mapInPandas stages, no shuffle between them):
+Each entry encodes real table rows to wire bytes IN-PLAN (mapInArrow for
+Avro, mapInPandas for protobuf), decodes them back, and aggregates the
+decoded columns; the DuckDB oracle computes the same aggregate over the raw
+table. A codec bug anywhere — varint edges, zigzag signs, decimal scaling,
+union branches, field order — changes the decoded values and breaks the
+value hash. The encode→decode pair rides one pipeline (one fused Python
+stage, or two with no shuffle between them):
 at 100 TB this is the exact shape of a Kafka-ingest decode stage, one
 Python/Arrow entry per partition batch.
 """

@@ -13,14 +13,18 @@ arrays/maps.  Implementing it directly gives a *real*, testable decode path:
   single-record API, and the reference the batch kernel is tested against);
 - the vectorised ``decode_avro_batch`` kernel — one numpy pass per field over
   an Arrow batch's value buffer, no per-record Python — behind the
-  Spark-level ``df_decode_avro``, which runs it via ``mapInArrow``: the scale
-  path. Encoding (``df_encode_avro``, ``df_roundtrip_avro``) stays per
-  record on ``mapInPandas``.
+  Spark-level ``df_decode_avro``: the scale path.
+
+Every Spark stage here (``df_decode_avro``, ``df_encode_avro``,
+``df_roundtrip_avro``) is one ``mapInArrow``: encode takes each Arrow batch's
+rows as Python values, decode runs the kernel.
 
 Schema resolution follows the spec's rules (the reference's "schema
-evolution" feature): fields are matched by name; reader-only fields take
-their default; writer-only fields are decoded and discarded; numeric
-promotions int→long→float→double and string↔bytes apply.
+evolution" feature) and is decided once per schema pair, by ``_resolve``:
+fields are matched by name; reader-only fields take their default;
+writer-only fields are decoded and discarded; numeric promotions
+int→long→float→double and string↔bytes apply. Both decoders walk the tree
+it returns.
 
 Logical types mirror the reference codec: ``decimal`` (bytes/fixed,
 two's-complement big-endian unscaled int → ``Decimal`` — the ScaledInteger
@@ -29,10 +33,10 @@ exact-arithmetic path), ``date`` (days), ``timestamp-millis/micros``.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as _dt
 import decimal as _decimal
 import functools
-import io
 import json
 import struct
 from typing import Any, Callable, Iterator
@@ -50,56 +54,15 @@ __all__ = [
 
 _EPOCH_DATE = _dt.date(1970, 1, 1)
 _EPOCH = _dt.datetime(1970, 1, 1)
+_EPOCH_UTC = _EPOCH.replace(tzinfo=_dt.timezone.utc)
 _MILLI = _dt.timedelta(milliseconds=1)
 _MICRO = _dt.timedelta(microseconds=1)
-
-
-# ---------------------------------------------------------------------------
-# primitive wire format
-# ---------------------------------------------------------------------------
-
-
-def _write_long(buf: io.BytesIO, n: int) -> None:
-    # zigzag then base-128 varint, little-endian 7-bit groups.
-    # Python ints are unbounded: n >> 127 is 0 for n >= 0 and -1 for n < 0,
-    # so this is the spec's (n << 1) ^ (n >> 63) without a fixed width.
-    z = (n << 1) ^ (n >> 127)
-    while True:
-        b = z & 0x7F
-        z >>= 7
-        if z:
-            buf.write(bytes((b | 0x80,)))
-        else:
-            buf.write(bytes((b,)))
-            return
-
-
-def _read_long(buf: io.BytesIO) -> int:
-    shift = 0
-    acc = 0
-    while True:
-        byte = buf.read(1)
-        if not byte:
-            raise EOFError("truncated varint")
-        b = byte[0]
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1)  # un-zigzag
-
-
-def _write_bytes(buf: io.BytesIO, data: bytes) -> None:
-    _write_long(buf, len(data))
-    buf.write(data)
-
-
-def _read_bytes(buf: io.BytesIO) -> bytes:
-    n = _read_long(buf)
-    data = buf.read(n)
-    if len(data) != n:
-        raise EOFError("truncated bytes")
-    return data
+#: int/long logical type → (epoch, unit): the value n stands for epoch + n·unit
+_INT_EPOCHS = {
+    "date": (_EPOCH_DATE, _dt.timedelta(days=1)),
+    "timestamp-millis": (_EPOCH, _MILLI),
+    "timestamp-micros": (_EPOCH, _MICRO),
+}
 
 
 # ---------------------------------------------------------------------------
@@ -197,8 +160,12 @@ def _branch_accepts(schema: Any):
         if logical == "decimal":
             return lambda v: isinstance(v, (_decimal.Decimal, bytes, bytearray))
         return lambda v: isinstance(v, (bytes, bytearray))
-    if t in ("record", "map"):
+    if t == "record":
         return lambda v: isinstance(v, dict)
+    if t == "map":  # a dict, or the (key, value) pairs of an Arrow map
+        return lambda v: isinstance(v, dict) or (
+            isinstance(v, list) and all(isinstance(e, tuple) and len(e) == 2 for e in v)
+        )
     if t == "array":
         return lambda v: isinstance(v, (list, tuple))
     return lambda v: False
@@ -262,20 +229,13 @@ def _compile_write(schema: Any):
         return w
     if t in ("int", "long"):
         logical = schema.get("logicalType") if isinstance(schema, dict) else None
-        if logical == "date":
-            def w(buf, v):
+        if logical in _INT_EPOCHS:
+            epoch, unit = _INT_EPOCHS[logical]
+
+            def w(buf, v, epoch=epoch, unit=unit):
                 if isinstance(v, _dt.date):
-                    v = (v - _EPOCH_DATE).days
-                _append_zlong(buf, int(v))
-        elif logical == "timestamp-millis":
-            def w(buf, v):
-                if isinstance(v, _dt.datetime):
-                    v = (v - _EPOCH) // _MILLI
-                _append_zlong(buf, int(v))
-        elif logical == "timestamp-micros":
-            def w(buf, v):
-                if isinstance(v, _dt.datetime):
-                    v = (v - _EPOCH) // _MICRO
+                    # an aware datetime is the instant it names, a naive one UTC
+                    v = (v - (_EPOCH_UTC if getattr(v, "tzinfo", None) else epoch)) // unit
                 _append_zlong(buf, int(v))
         else:
             def w(buf, v):
@@ -294,7 +254,7 @@ def _compile_write(schema: Any):
             scale = schema.get("scale", 0)
 
             def w(buf, v, scale=scale):
-                data = _decimal_to_bytes(v, scale)
+                data = _decimal_unscaled_bytes(v, scale)
                 _append_zlong(buf, len(data))
                 buf += data
         else:
@@ -382,61 +342,138 @@ def _match_branch(reader_union: list, writer_branch: Any) -> Any:
     raise ValueError(f"no reader branch for writer type {wname!r}")
 
 
-def _error_reader(msg: str):
-    def rd(data, pos, msg=msg):
-        raise ValueError(msg)
-    return rd
+def _coerce_default(default: Any, schema: Any) -> Any:
+    """Apply a reader-schema default (spec: defaults are JSON-typed)."""
+    t = _type_name(schema)
+    if t == "union":
+        # spec: default corresponds to the FIRST branch
+        return _coerce_default(default, schema[0])
+    if t == "null":
+        return None
+    if t in ("bytes", "fixed") and isinstance(schema, dict) and schema.get(
+        "logicalType"
+    ) == "decimal":
+        raw = default.encode("latin-1") if isinstance(default, str) else bytes(default)
+        return _bytes_to_decimal(raw, schema.get("scale", 0))
+    if t == "bytes" and isinstance(default, str):
+        return default.encode("latin-1")  # spec: bytes defaults are \u00XX strings
+    if t in ("int", "long") and isinstance(schema, dict):
+        if schema.get("logicalType") in _INT_EPOCHS:
+            epoch, unit = _INT_EPOCHS[schema["logicalType"]]
+            return epoch + unit * int(default)
+    return default
 
 
-def _compile_read(writer: Any, reader: Any):
-    """(writer, reader) schemas → ``read(data, pos) -> (value, pos)``
-    closure implementing the spec's schema-resolution rules, decided at
-    compile time (a writer branch the reader can't resolve errors only if
-    that branch actually occurs in the data — per spec)."""
+@dataclasses.dataclass
+class _Resolved:
+    """A (writer, reader) schema pair after resolution: all that a decoder
+    needs to know, so that no decoder looks at a schema."""
+
+    kind: str  #: the writer's type; "error" for a branch the reader cannot take
+    to: str = ""  #: the reader's type: the promotion target
+    logical: str | None = None  #: the reader's logical type
+    scale: int = 0  #: the reader's decimal scale
+    size: int = 0  #: fixed: the byte size
+    #: record: (name, node) per writer field; name None for a writer-only
+    #: field, which is read past and dropped
+    fields: tuple = ()
+    defaults: tuple = ()  #: record: (name, coerced default) per reader-only field
+    branches: tuple = ()  #: union: a node per writer branch
+    symbols: tuple = ()  #: enum: the writer's symbols
+    known: tuple = ()  #: enum: per writer symbol, whether the reader has it
+    items: _Resolved | None = None  #: array items / map values
+    error: str = ""  #: error: raised when a datum takes this branch
+
+    def complete(self) -> bool:
+        """True if every datum of the writer schema resolves."""
+        kids = [n for _, n in self.fields] + list(self.branches)
+        if self.items is not None:
+            kids.append(self.items)
+        return self.kind != "error" and all(self.known) and all(n.complete() for n in kids)
+
+
+def _resolve(writer: Any, reader: Any) -> _Resolved:
+    """The spec's schema-resolution rules applied to a (writer, reader)
+    schema pair, once. Raises ValueError for a pair that cannot resolve,
+    except in a writer union: a branch the reader cannot take becomes an
+    error node, which fails only if a datum takes it (per spec)."""
     wt, rt = _type_name(writer), _type_name(reader)
     if wt == "union":
         branches = []
         for wbranch in writer:
             try:
                 rbranch = _match_branch(reader, wbranch) if rt == "union" else reader
-                branches.append(_compile_read(wbranch, rbranch))
+                branches.append(_resolve(wbranch, rbranch))
             except ValueError as e:
-                branches.append(_error_reader(str(e)))
-
-        def rd(data, pos, branches=tuple(branches)):
-            idx, pos = _read_zlong_at(data, pos)
-            if not 0 <= idx < len(branches):
-                raise ValueError(f"union branch index {idx} out of range")
-            return branches[idx](data, pos)
-        return rd
+                branches.append(_Resolved("error", error=str(e)))
+        return _Resolved("union", branches=tuple(branches))
     if rt == "union":
-        return _compile_read(writer, _match_branch(reader, writer))
+        return _resolve(writer, _match_branch(reader, writer))
     if wt == "record":
         if rt != "record":
             raise ValueError(f"cannot resolve record into {rt}")
         rfields = {f["name"]: f for f in reader["fields"]}
-        entries = []
-        seen: set = set()
+        fields = []
         for wf in writer["fields"]:
             name = wf["name"]
             if name in rfields:
-                entries.append((name, _compile_read(wf["type"], rfields[name]["type"])))
-                seen.add(name)
+                fields.append((name, _resolve(wf["type"], rfields[name]["type"])))
             else:  # writer-only: decoded to advance the stream, discarded
-                entries.append((None, _compile_read(wf["type"], wf["type"])))
+                fields.append((None, _resolve(wf["type"], wf["type"])))
+        written = {wf["name"] for wf in writer["fields"]}
         defaults = []
         for rf in reader["fields"]:
-            if rf["name"] not in seen:
+            if rf["name"] not in written:
                 if "default" not in rf:
                     raise ValueError(
                         f"reader field {rf['name']!r} missing from writer "
                         "and has no default"
                     )
-                defaults.append(
-                    (rf["name"], _coerce_default(rf["default"], rf["type"]))
-                )
+                defaults.append((rf["name"], _coerce_default(rf["default"], rf["type"])))
+        return _Resolved("record", fields=tuple(fields), defaults=tuple(defaults))
+    if wt != rt and rt not in _PROMOTIONS.get(wt, ()):
+        raise ValueError(f"cannot promote {wt!r} to {rt!r}")
+    if wt in ("array", "map"):
+        key = "items" if wt == "array" else "values"
+        return _Resolved(wt, items=_resolve(writer[key], reader[key]))
+    if wt == "enum":
+        known = set(reader["symbols"])
+        symbols = tuple(writer["symbols"])
+        return _Resolved("enum", symbols=symbols, known=tuple(s in known for s in symbols))
+    if wt not in _ARROW_PRIMITIVES:
+        raise ValueError(f"unsupported avro type for decode: {writer!r}")
+    logical = reader.get("logicalType") if isinstance(reader, dict) else None
+    if logical == "decimal" and wt == "string":
+        raise ValueError("cannot resolve string as decimal")
+    if wt == "fixed" and writer["size"] != reader["size"]:
+        raise ValueError(f"cannot resolve fixed({writer['size']}) as fixed({reader['size']})")
+    return _Resolved(
+        wt,
+        to=rt,
+        logical=logical,
+        scale=reader.get("scale", 0) if logical == "decimal" else 0,
+        size=writer["size"] if wt == "fixed" else 0,
+    )
 
-        def rd(data, pos, entries=tuple(entries), defaults=tuple(defaults)):
+
+def _compile_read(node: _Resolved):
+    """Resolved schema pair → ``read(data, pos) -> (value, pos)`` closure."""
+    k = node.kind
+    if k == "error":
+        def rd(data, pos, msg=node.error):
+            raise ValueError(msg)
+        return rd
+    if k == "union":
+        def rd(data, pos, branches=tuple(_compile_read(b) for b in node.branches)):
+            idx, pos = _read_zlong_at(data, pos)
+            if not 0 <= idx < len(branches):
+                raise ValueError(f"union branch index {idx} out of range")
+            return branches[idx](data, pos)
+        return rd
+    if k == "record":
+        entries = tuple((name, _compile_read(n)) for name, n in node.fields)
+
+        def rd(data, pos, entries=entries, defaults=node.defaults):
             out = {}
             for name, fr in entries:
                 v, pos = fr(data, pos)
@@ -446,62 +483,37 @@ def _compile_read(writer: Any, reader: Any):
                 out[name] = dv
             return out, pos
         return rd
-    # primitives / named types
-    if wt != rt and rt not in _PROMOTIONS.get(wt, ()):
-        raise ValueError(f"cannot promote {wt!r} to {rt!r}")
-    if wt == "null":
+    if k == "null":
         return lambda data, pos: (None, pos)
-    if wt == "boolean":
+    if k == "boolean":
         def rd(data, pos):
             return data[pos] == 1, pos + 1
         return rd
-    if wt in ("int", "long"):
-        if rt in ("float", "double"):
+    if k in ("int", "long"):
+        if node.to in ("float", "double"):
             def rd(data, pos):
                 n, pos = _read_zlong_at(data, pos)
                 return float(n), pos
-            return rd
-        logical = reader.get("logicalType") if isinstance(reader, dict) else None
-        if logical == "date":
-            def rd(data, pos):
+        elif node.logical in _INT_EPOCHS:
+            epoch, unit = _INT_EPOCHS[node.logical]
+
+            def rd(data, pos, epoch=epoch, unit=unit):
                 n, pos = _read_zlong_at(data, pos)
-                return _EPOCH_DATE + _dt.timedelta(days=n), pos
-        elif logical == "timestamp-millis":
-            def rd(data, pos):
-                n, pos = _read_zlong_at(data, pos)
-                return _EPOCH + _dt.timedelta(milliseconds=n), pos
-        elif logical == "timestamp-micros":
-            def rd(data, pos):
-                n, pos = _read_zlong_at(data, pos)
-                return _EPOCH + _dt.timedelta(microseconds=n), pos
+                return epoch + unit * n, pos
         else:
             rd = _read_zlong_at
         return rd
-    if wt == "float":
-        def rd(data, pos, up=_S_F4.unpack_from):
-            if pos + 4 > len(data):
-                raise EOFError("truncated float")
-            return up(data, pos)[0], pos + 4
-        return rd
-    if wt == "double":
-        def rd(data, pos, up=_S_D8.unpack_from):
-            if pos + 8 > len(data):
-                raise EOFError("truncated double")
-            return up(data, pos)[0], pos + 8
-        return rd
-    if wt in ("bytes", "string"):
-        dec_scale = (
-            reader.get("scale", 0)
-            if wt == "bytes"
-            and isinstance(reader, dict)
-            and reader.get("logicalType") == "decimal"
-            else None
-        )
-        to_str = (wt == "string" and rt != "bytes") or (
-            wt == "bytes" and rt == "string" and dec_scale is None
-        )
+    if k in ("float", "double"):
+        packer = _S_F4 if k == "float" else _S_D8
 
-        def rd(data, pos, scale=dec_scale, to_str=to_str):
+        def rd(data, pos, up=packer.unpack_from, width=packer.size, what=f"truncated {k}"):
+            if pos + width > len(data):
+                raise EOFError(what)
+            return up(data, pos)[0], pos + width
+        return rd
+    scale = node.scale if node.logical == "decimal" else None
+    if k in ("bytes", "string"):
+        def rd(data, pos, scale=scale, to_str=node.to == "string"):
             n, pos = _read_zlong_at(data, pos)
             end = pos + n
             if end > len(data):
@@ -511,21 +523,25 @@ def _compile_read(writer: Any, reader: Any):
                 return _bytes_to_decimal(raw, scale), end
             return (raw.decode("utf-8") if to_str else raw), end
         return rd
-    if wt == "enum":
-        symbols = writer["symbols"]
-        allowed = set(reader["symbols"]) if rt == "enum" else None
-
-        def rd(data, pos, symbols=symbols, allowed=allowed):
+    if k == "fixed":
+        def rd(data, pos, size=node.size, scale=scale):
+            end = pos + size
+            if end > len(data):
+                raise EOFError("truncated fixed")
+            raw = data[pos:end]
+            return (_bytes_to_decimal(raw, scale) if scale is not None else raw), end
+        return rd
+    if k == "enum":
+        def rd(data, pos, symbols=node.symbols, known=node.known):
             idx, pos = _read_zlong_at(data, pos)
             if not 0 <= idx < len(symbols):
                 raise ValueError(f"enum index {idx} out of range")
-            sym = symbols[idx]
-            if allowed is not None and sym not in allowed:
-                raise ValueError(f"enum symbol {sym!r} not in reader schema")
-            return sym, pos
+            if not known[idx]:
+                raise ValueError(f"enum symbol {symbols[idx]!r} not in reader schema")
+            return symbols[idx], pos
         return rd
-    if wt == "array":
-        ri = _compile_read(writer["items"], reader["items"])
+    if k == "array":
+        ri = _compile_read(node.items)
 
         def rd(data, pos, ri=ri):
             out = []
@@ -540,8 +556,8 @@ def _compile_read(writer: Any, reader: Any):
                     v, pos = ri(data, pos)
                     out.append(v)
         return rd
-    if wt == "map":
-        rv = _compile_read(writer["values"], reader["values"])
+    if k == "map":
+        rv = _compile_read(node.items)
 
         def rd(data, pos, rv=rv):
             out = {}
@@ -558,22 +574,6 @@ def _compile_read(writer: Any, reader: Any):
                     pos += n
                     out[k], pos = rv(data, pos)
         return rd
-    if wt == "fixed":
-        size = writer["size"]
-        dec_scale = (
-            reader.get("scale", 0)
-            if isinstance(reader, dict) and reader.get("logicalType") == "decimal"
-            else None
-        )
-
-        def rd(data, pos, size=size, scale=dec_scale):
-            end = pos + size
-            if end > len(data):
-                raise EOFError("truncated fixed")
-            raw = data[pos:end]
-            return (_bytes_to_decimal(raw, scale) if scale is not None else raw), end
-        return rd
-    raise ValueError(f"unsupported avro type for decode: {writer!r}")
 
 
 class AvroBinaryCodec:
@@ -600,7 +600,7 @@ class AvroBinaryCodec:
         # schema shapes (unions with 2+ non-null branches) that the decoder
         # handles fine, and decode-only codecs must still construct.
         self._write = None
-        self._read = _compile_read(self.writer, self.reader)
+        self._read = _compile_read(_resolve(self.writer, self.reader))
 
     def encode(self, record: dict) -> bytes:
         if self._write is None:
@@ -615,33 +615,6 @@ class AvroBinaryCodec:
         except IndexError:
             raise EOFError("truncated avro datum") from None
         return value
-
-
-
-def _coerce_default(default: Any, schema: Any) -> Any:
-    """Apply a reader-schema default (spec: defaults are JSON-typed)."""
-    t = _type_name(schema)
-    if t == "union":
-        # spec: default corresponds to the FIRST branch
-        return _coerce_default(default, schema[0])
-    if t == "null":
-        return None
-    if t in ("bytes", "fixed") and isinstance(schema, dict) and schema.get(
-        "logicalType"
-    ) == "decimal":
-        raw = default.encode("latin-1") if isinstance(default, str) else bytes(default)
-        return _bytes_to_decimal(raw, schema.get("scale", 0))
-    if t == "bytes" and isinstance(default, str):
-        return default.encode("latin-1")  # spec: bytes defaults are \u00XX strings
-    if t in ("int", "long") and isinstance(schema, dict):
-        logical = schema.get("logicalType")
-        if logical == "date":
-            return _EPOCH_DATE + _dt.timedelta(days=int(default))
-        if logical == "timestamp-millis":
-            return _EPOCH + _dt.timedelta(milliseconds=int(default))
-        if logical == "timestamp-micros":
-            return _EPOCH + _dt.timedelta(microseconds=int(default))
-    return default
 
 
 # ---------------------------------------------------------------------------
@@ -666,10 +639,6 @@ def _decimal_unscaled_bytes(value, scale: int) -> bytes:
     n = int(d)
     length = max(1, (n.bit_length() + 8) // 8)  # +8 keeps the sign bit
     return n.to_bytes(length, "big", signed=True)
-
-
-def _decimal_to_bytes(value, scale: int) -> bytes:
-    return _decimal_unscaled_bytes(value, scale)
 
 
 def _decimal_to_fixed(value, schema: dict) -> bytes:
@@ -934,32 +903,23 @@ _LOCATE_ROWS = 32
 _LOCATE_ITEMS = 32
 
 
-def _batch_error(msg: str):
-    def fn(st, idx):
-        if len(idx):
-            raise ValueError(msg)
-    return fn
+def _compile_batch(node: _Resolved, typ: pa.DataType | None):
+    """Resolved schema pair → batch decoder ``fn(st, idx)``. ``typ`` is the
+    Arrow type to build (``_arrow_type(reader)``); None decodes only to
+    move the cursors past a writer-only field."""
+    k = node.kind
+    if k == "error":
+        def fn(st, idx, msg=node.error):
+            if len(idx):
+                raise ValueError(msg)
+        return fn
+    if k == "union":
+        # a branch into the reader's null leaves its rows null
+        branches = tuple(
+            None if b.kind == "null" else _compile_batch(b, typ) for b in node.branches
+        )
 
-
-def _compile_batch(writer: Any, reader: Any, typ: pa.DataType | None):
-    """(writer, reader) schemas → batch decoder ``fn(st, idx)``, resolving
-    them by the same rules as ``_compile_read``. ``typ`` is the Arrow type
-    to build (``_arrow_type(reader)``); None decodes only to move the
-    cursors past a writer-only field."""
-    wt, rt = _type_name(writer), _type_name(reader)
-    if wt == "union":
-        branches = []
-        for wbranch in writer:
-            try:
-                rbranch = _match_branch(reader, wbranch) if rt == "union" else reader
-                if _type_name(rbranch) == "null":
-                    branches.append(None)  # its rows stay null
-                else:
-                    branches.append(_compile_batch(wbranch, rbranch, typ))
-            except ValueError as e:
-                branches.append(_batch_error(str(e)))
-
-        def fn(st, idx, branches=tuple(branches)):
+        def fn(st, idx, branches=branches):
             b = _read_varints(st, idx)
             bad = (b < 0) | (b >= len(branches))
             if bad.any():
@@ -974,37 +934,16 @@ def _compile_batch(writer: Any, reader: Any, typ: pa.DataType | None):
                         rows.append(sel)
             return None if typ is None else _place(parts, rows, len(idx), typ)
         return fn
-    if rt == "union":
-        return _compile_batch(writer, _match_branch(reader, writer), typ)
-    if wt == "record":
-        if rt != "record":
-            raise ValueError(f"cannot resolve record into {rt}")
-        rfields = {f["name"]: f for f in reader["fields"]}
-        entries = []
-        for wf in writer["fields"]:
-            name = wf["name"]
-            if name in rfields:
-                ftyp = None if typ is None else typ.field(name).type
-                dec = _compile_batch(wf["type"], rfields[name]["type"], ftyp)
-                entries.append((name, dec))
-            else:  # writer-only: decoded to advance the cursors, dropped
-                entries.append((None, _compile_batch(wf["type"], wf["type"], None)))
-        written = {wf["name"] for wf in writer["fields"]}
-        defaults = {}
-        for rf in reader["fields"]:
-            if rf["name"] not in written:
-                if "default" not in rf:
-                    raise ValueError(
-                        f"reader field {rf['name']!r} missing from writer "
-                        "and has no default"
-                    )
-                if typ is not None:
-                    defaults[rf["name"]] = pa.scalar(
-                        _coerce_default(rf["default"], rf["type"]),
-                        type=typ.field(rf["name"]).type,
-                    )
+    if k == "record":
+        entries = tuple(
+            (name, _compile_batch(n, None if typ is None or name is None else typ.field(name).type))
+            for name, n in node.fields
+        )
+        defaults = () if typ is None else tuple(
+            (name, pa.scalar(v, type=typ.field(name).type)) for name, v in node.defaults
+        )
 
-        def fn(st, idx, entries=tuple(entries)):
+        def fn(st, idx, entries=entries, defaults=defaults):
             cols = {}
             for name, dec in entries:
                 out = dec(st, idx)
@@ -1012,7 +951,7 @@ def _compile_batch(writer: Any, reader: Any, typ: pa.DataType | None):
                     cols[name] = out
             if typ is None:
                 return None
-            for name, value in defaults.items():  # reader defaults: constants
+            for name, value in defaults:  # reader defaults: constants
                 cols[name] = pa.repeat(value, len(idx))
             if not cols:
                 return pa.array([{}] * len(idx), typ)
@@ -1020,49 +959,43 @@ def _compile_batch(writer: Any, reader: Any, typ: pa.DataType | None):
                 [cols[f.name] for f in typ], fields=list(typ)
             )
         return fn
-    # primitives / named types
-    if wt != rt and rt not in _PROMOTIONS.get(wt, ()):
-        raise ValueError(f"cannot promote {wt!r} to {rt!r}")
-    if wt == "null":
+    if k == "null":
         return lambda st, idx: None if typ is None else pa.nulls(len(idx), typ)
-    if wt == "boolean":
+    if k == "boolean":
         def fn(st, idx):
             start = _advance(st, idx, 1, "boolean")
             return None if typ is None else pa.array(st.buf[start] == 1)
         return fn
-    if wt in ("int", "long"):
-        logical = reader.get("logicalType") if isinstance(reader, dict) else None
-        bounds, scale = _INT_LOGICAL.get(logical, (_INT32 if rt == "int" else None, 1))
+    if k in ("int", "long"):
+        bounds, scale = _INT_LOGICAL.get(
+            node.logical, (_INT32 if node.to == "int" else None, 1)
+        )
 
-        def fn(st, idx):
+        def fn(st, idx, what=f"avro {node.logical or node.to}"):
             v = _read_varints(st, idx)
             if typ is None:
                 return None
             if pa.types.is_floating(typ):  # int/long → float/double promotion
                 return _fixed_width(typ, v.astype(typ.to_pandas_dtype()))
             if bounds is not None:
-                _check_range(v, *bounds, f"avro {logical or rt}")
+                _check_range(v, *bounds, what)
             if typ.bit_width == 32:
                 v = v.astype(np.int32)
             return _fixed_width(typ, v * scale if scale != 1 else v)
         return fn
-    if wt in ("float", "double"):
-        width, dtype = (4, "<f4") if wt == "float" else (8, "<f8")
+    if k in ("float", "double"):
+        width, dtype = (4, "<f4") if k == "float" else (8, "<f8")
 
         def fn(st, idx):
-            start = _advance(st, idx, width, wt)
+            start = _advance(st, idx, width, k)
             if typ is None:
                 return None
             raw = st.buf[start[:, None] + np.arange(width)]
             v = raw.view(dtype).ravel()
             return _fixed_width(typ, v.astype(typ.to_pandas_dtype()))
         return fn
-    if wt in ("bytes", "string", "fixed"):
-        size = writer["size"] if wt == "fixed" else None
-        if typ is not None and pa.types.is_decimal(typ) and wt == "string":
-            raise ValueError("cannot resolve string as decimal")
-
-        def fn(st, idx):
+    if k in ("bytes", "string", "fixed"):
+        def fn(st, idx, size=node.size if k == "fixed" else None):
             if size is None:
                 start, length = _read_spans(st, idx)
             else:
@@ -1074,13 +1007,9 @@ def _compile_batch(writer: Any, reader: Any, typ: pa.DataType | None):
                 return _decimal_array(st.buf, start, length, typ)
             return _binary(typ, *_gather(st.buf, start, length))
         return fn
-    if wt == "enum":
-        symbols = writer["symbols"]
-        allowed = (
-            np.array([s in set(reader["symbols"]) for s in symbols])
-            if rt == "enum"
-            else None
-        )
+    if k == "enum":
+        symbols = node.symbols
+        known = np.array(node.known)
         table = pa.array(symbols, pa.string())
 
         def fn(st, idx):
@@ -1088,17 +1017,16 @@ def _compile_batch(writer: Any, reader: Any, typ: pa.DataType | None):
             bad = (i < 0) | (i >= len(symbols))
             if bad.any():
                 raise ValueError(f"enum index {i[bad][0]} out of range")
-            if allowed is not None and not allowed[i].all():
-                sym = symbols[i[~allowed[i]][0]]
+            if not known[i].all():
+                sym = symbols[i[~known[i]][0]]
                 raise ValueError(f"enum symbol {sym!r} not in reader schema")
             return None if typ is None else table.take(i)
         return fn
-    if wt in ("array", "map"):
-        is_map = wt == "map"
-        key = "values" if is_map else "items"
+    if k in ("array", "map"):
+        is_map = k == "map"
         ityp = None if typ is None else (typ.item_type if is_map else typ.value_type)
-        item = _compile_batch(writer[key], reader[key], ityp)
-        step = _compile_read(writer[key], writer[key])  # one item, per record
+        item = _compile_batch(node.items, ityp)
+        step = _compile_read(node.items)  # one item, per record
 
         def read_items(st, rows):
             """One item at each cursor in ``rows`` → (map keys, values)."""
@@ -1194,7 +1122,6 @@ def _compile_batch(writer: Any, reader: Any, typ: pa.DataType | None):
                 return pa.MapArray.from_arrays(offsets, ks, items, type=typ)
             return pa.ListArray.from_arrays(offsets, items, type=typ)
         return fn
-    raise ValueError(f"unsupported avro type for decode: {writer!r}")
 
 
 class _BatchDecoder:
@@ -1206,7 +1133,7 @@ class _BatchDecoder:
         if _type_name(writer) != "record" or _type_name(reader) != "record":
             raise ValueError("top-level avro schema must be a record")
         self.type = _arrow_type(reader, tz)
-        self._fn = _compile_batch(writer, reader, self.type)
+        self._fn = _compile_batch(_resolve(writer, reader), self.type)
 
     def decode_rows(self, buf, start, end, rows) -> pa.StructArray:
         """Decode the datums ``buf[start[r]:end[r]]`` of ``rows``."""
@@ -1270,7 +1197,7 @@ def decode_framed_batch(
 
 
 # ---------------------------------------------------------------------------
-# Spark integration — vectorised decode via mapInArrow
+# Spark integration — one mapInArrow stage per encode, decode or round trip
 # ---------------------------------------------------------------------------
 
 
@@ -1333,100 +1260,26 @@ def df_decode_avro(
     return df.mapInArrow(gen, schema=schema)
 
 
+def _encode_rows(codec: AvroBinaryCodec, batch: pa.RecordBatch, head: bytes = b""):
+    """One Avro datum (after ``head``) per row of an Arrow batch → binary
+    array. Spark's Arrow batches give the codec what it writes: timestamps
+    as aware datetimes, nulls as None, decimals as ``Decimal``, maps as
+    (key, value) pairs."""
+    return pa.array([head + codec.encode(row) for row in batch.to_pylist()], pa.binary())
+
+
 def df_encode_avro(df, writer_schema_json: str, out_col: str = "value"):
-    """Encode every row of ``df`` into one Avro-binary bytes column;
-    timestamps are written as the UTC instants they hold."""
-    import pandas as pd
-
+    """Encode every row of ``df`` into one Avro-binary bytes column, in one
+    ``mapInArrow`` stage; timestamps are written as the UTC instants they
+    hold."""
     from pyspark.sql.types import BinaryType, StructField, StructType
-
-    to_utc = _timestamps_to_utc(df)
 
     def gen(batches) -> Iterator:
         codec = AvroBinaryCodec(writer_schema_json)
-        for pdf in batches:
-            pdf = to_utc(pdf)
-            vals = [
-                codec.encode({k: _py(v) for k, v in zip(pdf.columns, row)})
-                for row in pdf.itertuples(index=False, name=None)
-            ]
-            yield pd.DataFrame({out_col: vals})
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays([_encode_rows(codec, batch)], names=[out_col])
 
-    return df.mapInPandas(gen, schema=StructType([StructField(out_col, BinaryType())]))
-
-
-def _to_utc(dtype, tz: str):
-    """Converter for one mapInPandas value of Spark type ``dtype`` → the
-    same value with naive UTC timestamps, or None if ``dtype`` holds no
-    timestamp. mapInPandas hands timestamps over as naive wall-clock times
-    in the session time zone ``tz``; a wall-clock time that a DST change
-    repeats reads as standard time, the rule Spark itself applies to the
-    naive timestamps mapInPandas returns."""
-    import pandas as pd
-
-    from pyspark.sql.types import ArrayType, MapType, StructType, TimestampType
-
-    if isinstance(dtype, TimestampType):
-        return lambda v: (
-            pd.Timestamp(v).tz_localize(tz, ambiguous=False).tz_convert("UTC").tz_localize(None)
-        )
-    if isinstance(dtype, StructType):
-        convs = [(f.name, c) for f in dtype.fields if (c := _to_utc(f.dataType, tz))]
-        if convs:
-            def conv(v):
-                v = dict(v)
-                for name, c in convs:
-                    if v[name] is not None:
-                        v[name] = c(v[name])
-                return v
-            return conv
-    if isinstance(dtype, ArrayType):
-        c = _to_utc(dtype.elementType, tz)
-        if c:
-            return lambda v: [None if x is None else c(x) for x in v]
-    if isinstance(dtype, MapType):
-        c = _to_utc(dtype.valueType, tz)
-        if c:
-            return lambda v: {k: None if x is None else c(x) for k, x in v.items()}
-    return None
-
-
-def _timestamps_to_utc(df, columns=None):
-    """pandas frame → pandas frame function for a mapInPandas stage over
-    ``df`` (restricted to ``columns``): every timestamp becomes the naive UTC
-    datetime the codec writes as an Avro instant."""
-    from pyspark.sql.types import TimestampType
-
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-    convs = {}
-    for f in df.schema.fields:
-        if columns is not None and f.name not in columns:
-            continue
-        if isinstance(f.dataType, TimestampType):  # datetime64 column
-            convs[f.name] = lambda s: (
-                s.dt.tz_localize(tz, ambiguous=False).dt.tz_convert("UTC").dt.tz_localize(None)
-            )
-        elif (c := _to_utc(f.dataType, tz)) is not None:
-            convs[f.name] = lambda s, c=c: s.map(lambda v: None if v is None else c(v))
-
-    def apply(pdf):
-        for name, conv in convs.items():
-            pdf[name] = conv(pdf[name])
-        return pdf
-
-    return apply
-
-
-def _py(v):
-    """numpy scalar → plain Python for the codec."""
-    try:
-        import numpy as np
-
-        if isinstance(v, np.generic):
-            return v.item()
-    except ImportError:  # pragma: no cover
-        pass
-    return v
+    return df.mapInArrow(gen, schema=StructType([StructField(out_col, BinaryType())]))
 
 
 def df_roundtrip_avro(
@@ -1435,32 +1288,25 @@ def df_roundtrip_avro(
     reader_schema_json: str | None = None,
 ):
     """Encode every row to Avro-binary wire bytes and decode them straight
-    back (with reader-schema resolution) in ONE Arrow stage.
+    back (with reader-schema resolution) in ONE ``mapInArrow`` stage.
 
-    Same result as ``df_encode_avro`` ∘ ``df_decode_avro`` but a single
-    ``mapInPandas`` pass, so the per-stage Arrow/Python-worker overhead is
-    paid once — the right shape when the wire bytes don't need to cross a
-    stage boundary (codec verification, re-serialization pipelines). The
-    two-stage forms remain the path when bytes genuinely leave the plan
-    (Kafka sink, binary files).
+    Same result as ``df_encode_avro`` ∘ ``df_decode_avro`` — each batch is
+    encoded per row, then its wire bytes go through the batch kernel — but
+    the per-stage Arrow/Python-worker overhead is paid once: the right
+    shape when the wire bytes don't need to cross a stage boundary (codec
+    verification, re-serialization pipelines). The two-stage forms remain
+    the path when bytes genuinely leave the plan (Kafka sink, binary
+    files).
     """
-    import pandas as pd
-
     from pyspark.sql.types import StructType
 
     reader = json.loads(reader_schema_json or writer_schema_json)
-    fields = [f["name"] for f in reader["fields"]]
     schema = StructType(_spark_fields(reader))
 
     def gen(batches) -> Iterator:
-        enc = AvroBinaryCodec(writer_schema_json)
-        dec = AvroBinaryCodec(writer_schema_json, reader_schema_json)
-        for pdf in batches:
-            wire = [
-                enc.encode({k: _py(v) for k, v in zip(pdf.columns, row)})
-                for row in pdf.itertuples(index=False, name=None)
-            ]
-            recs = [dec.decode(w) for w in wire]
-            yield pd.DataFrame({f: [r.get(f) for r in recs] for f in fields})
+        codec = AvroBinaryCodec(writer_schema_json)
+        decode = _batch_decoder(writer_schema_json, reader_schema_json, SPARK_TZ)
+        for batch in batches:
+            yield pa.RecordBatch.from_struct_array(decode(_encode_rows(codec, batch)))
 
-    return df.mapInPandas(gen, schema=schema)
+    return df.mapInArrow(gen, schema=schema)

@@ -11,10 +11,11 @@ Spark-native mapping:
   ships no connector jar and has no network — `avro_binary.df_decode_avro`
   / `df_encode_avro` implement the public Avro binary spec in Python,
   including decimal logical types and reader/writer schema resolution (the
-  reference's schema-evolution contract). Decode is vectorised: a numpy
-  kernel over each Arrow batch via `mapInArrow`; encode stays per record
-  via `mapInPandas`. The schema-mapping half (Avro JSON schema → Spark types,
-  `decimal` → DecimalType — the ScaledInteger-parity path) lives below.
+  reference's schema-evolution contract). Both directions run as one
+  `mapInArrow` stage: decode is vectorised (a numpy kernel over each Arrow
+  batch), encode writes each batch's rows per record. The schema-mapping
+  half (Avro JSON schema → Spark types, `decimal` → DecimalType — the
+  ScaledInteger-parity path) lives below.
 - Protobuf: same split — `from_protobuf`/`to_protobuf` when spark-protobuf
   is present; `proto_binary.df_decode_protobuf` (pure-Python wire-format
   codec + minimal .proto parser, per record via `mapInPandas`) otherwise.

@@ -36,7 +36,7 @@ import json
 import struct
 from pathlib import Path
 
-from .avro_binary import _PROMOTIONS, _type_name
+from .avro_binary import _resolve
 
 __all__ = [
     "FileSchemaRegistry",
@@ -193,8 +193,13 @@ class FileSchemaRegistry:
 
 
 def can_read(reader_json_or_schema, writer_json_or_schema) -> bool:
-    """True if data written with ``writer`` can be decoded as ``reader``."""
-    return _resolvable(_load(reader_json_or_schema), _load(writer_json_or_schema))
+    """True if every datum written with ``writer`` can be decoded as
+    ``reader``, by the rules the decoders themselves resolve with."""
+    writer, reader = _load(writer_json_or_schema), _load(reader_json_or_schema)
+    try:
+        return _resolve(writer, reader).complete()
+    except ValueError:
+        return False
 
 
 def _load(schema):
@@ -205,32 +210,6 @@ def _load(schema):
         return json.loads(schema)
     except json.JSONDecodeError:
         return schema  # bare primitive name like "long"
-
-
-def _resolvable(reader, writer) -> bool:
-    rt, wt = _type_name(reader), _type_name(writer)
-    if wt == "union":
-        return all(_resolvable(reader, b) for b in writer)
-    if rt == "union":
-        return any(_resolvable(b, writer) for b in reader)
-    if rt == "record" and wt == "record":
-        wfields = {f["name"]: f for f in writer["fields"]}
-        for rf in reader["fields"]:
-            if rf["name"] in wfields:
-                if not _resolvable(rf["type"], wfields[rf["name"]]["type"]):
-                    return False
-            elif "default" not in rf:
-                return False
-        return True
-    if rt == "array" and wt == "array":
-        return _resolvable(reader["items"], writer["items"])
-    if rt == "map" and wt == "map":
-        return _resolvable(reader["values"], writer["values"])
-    if rt == "enum" and wt == "enum":
-        return set(writer["symbols"]) <= set(reader["symbols"])
-    if rt == "fixed" and wt == "fixed":
-        return reader.get("size") == writer.get("size")
-    return rt == wt or rt in _PROMOTIONS.get(wt, set())
 
 
 # ---------------------------------------------------------------------------
@@ -267,11 +246,11 @@ def df_encode_confluent(
 
     ``passthrough_cols`` are excluded from the Avro record and emitted
     unchanged alongside ``out_col`` (e.g. a Kafka message key)."""
-    import pandas as pd
+    import pyarrow as pa
 
     from pyspark.sql.types import BinaryType, StructField, StructType
 
-    from .avro_binary import AvroBinaryCodec, _py, _timestamps_to_utc
+    from .avro_binary import AvroBinaryCodec, _encode_rows
 
     registry = FileSchemaRegistry(registry_path)
     writer_json = registry.get_schema(subject, version)
@@ -280,26 +259,17 @@ def df_encode_confluent(
     head = bytes((CONFLUENT_MAGIC,)) + _ID_STRUCT.pack(schema_id)
     passthrough = list(passthrough_cols or [])
     data_cols = [c for c in df.columns if c not in passthrough]
-    to_utc = _timestamps_to_utc(df, data_cols)
 
     def gen(batches):
         codec = AvroBinaryCodec(writer_json)
-        for pdf in batches:
-            pdf = to_utc(pdf)
-            vals = [
-                head + codec.encode({k: _py(v) for k, v in zip(data_cols, row)})
-                for row in pdf[data_cols].itertuples(index=False, name=None)
-            ]
-            out = {c: pdf[c].values for c in passthrough}
-            out[out_col] = vals
-            yield pd.DataFrame(out)
+        for batch in batches:
+            vals = _encode_rows(codec, batch.select(data_cols), head)
+            cols = [batch.column(c) for c in passthrough] + [vals]
+            yield pa.RecordBatch.from_arrays(cols, names=passthrough + [out_col])
 
-    out_fields = [
-        StructField(f.name, f.dataType)
-        for f in df.schema.fields
-        if f.name in passthrough
-    ] + [StructField(out_col, BinaryType())]
-    return df.mapInPandas(gen, schema=StructType(out_fields))
+    out_fields = [StructField(c, df.schema[c].dataType) for c in passthrough]
+    out_fields.append(StructField(out_col, BinaryType()))
+    return df.mapInArrow(gen, schema=StructType(out_fields))
 
 
 def _confluent_ids(frames):
