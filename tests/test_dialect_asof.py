@@ -830,6 +830,71 @@ def test_streaming_asof_sql_ss_matches_batch_on_random_data(spark, tmp_path):
     assert got == want and len(got) == 300
 
 
+def test_streaming_asof_ss_flushes_final_sub_ms_left_row(spark, tmp_path):
+    """Regression: the watermark is in ms, so a left row past the first µs
+    of the final millisecond (here the corpus-max event, 500 µs into its
+    ms, plus a quote 100 µs into that same ms) used to stay pending
+    forever — a bounded run dropped it. Both stateful forms (the SQL
+    route's bucketed operator and the per-key one) must equal DuckDB's
+    strict ASOF JOIN, every left row included."""
+    import datetime as dt
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from velostream_spark.streaming.asof_stream import asof_join_stream_stream
+    from velostream_spark.streaming.runner import run_available_now
+    from velostream_spark.streaming.source import stream_parquet
+
+    base = dt.datetime(2024, 1, 1)
+    us = lambda n: dt.timedelta(microseconds=n)  # noqa: E731
+    trades = [(i, 1 + i % 2, base + us(1_000_000 * i + 250 * (i % 4))) for i in range(20)]
+    trades.append((20, 1, base + us(19_000_000 + 7_500)))  # the max event time
+    quotes = [(100 + j, 1 + j % 2, base + us(2_000_000 * j + 123), float(j)) for j in range(10)]
+    quotes.append((110, 1, base + us(19_000_000 + 7_100), 99.0))
+    tdf = spark.createDataFrame(trades, "trade_id int, k int, ts timestamp")
+    qdf = spark.createDataFrame(quotes, "qid int, k int, ts timestamp, px double")
+    tsrc, qsrc = str(tmp_path / "trades"), str(tmp_path / "quotes")
+    tdf.write.parquet(tsrc)
+    qdf.write.parquet(qsrc)
+    want = sorted(duckdb.sql(
+        f"SELECT s.trade_id, q.px FROM read_parquet('{tsrc}/*.parquet') s "
+        f"ASOF LEFT JOIN read_parquet('{qsrc}/*.parquet') q "
+        "ON s.k = q.k AND s.ts > q.ts"
+    ).fetchall(), key=lambda r: r[0])
+    assert len(want) == 21 and want[-1] == (20, 99.0)
+
+    e = SqlEngine(spark, time_col="ts")
+    e.execute_streaming(
+        "CREATE STREAM sub_ms_ss AS SELECT s.trade_id, q.px "
+        "FROM s ASOF LEFT JOIN q ON s.k = q.k AND s.ts > q.ts "
+        f"WITH ('s.type' = 'file_source', 's.path' = '{tsrc}', "
+        "'s.format' = 'parquet', "
+        f"'q.type' = 'file_source', 'q.path' = '{qsrc}', "
+        "'q.format' = 'parquet')"
+    )
+    got = sorted((r["trade_id"], r["px"]) for r in spark.table("sub_ms_ss").collect())
+    assert got == want
+
+    usrc = str(tmp_path / "union")
+    tdf.select("trade_id", "k", "ts", F.lit("L").alias("side"),
+               F.lit(None).cast("double").alias("px")).unionByName(
+        qdf.select(F.col("qid").alias("trade_id"), "k", "ts",
+                   F.lit("R").alias("side"), "px")
+    ).write.parquet(usrc)
+    sdf = stream_parquet(spark, usrc, schema=spark.read.parquet(usrc).schema)
+    perkey = run_available_now(
+        asof_join_stream_stream(
+            sdf.withWatermark("ts", "0 seconds"), key_col="k", time_col="ts",
+            side_col="side", left_side="L", id_col="trade_id",
+            payload_cols=["px"], tiebreak_col="px",
+        ),
+        "append",
+        "sub_ms_perkey",
+    )
+    assert sorted((r["trade_id"], r["asof_px"]) for r in perkey.collect()) == want
+
+
 def test_sub_outside_literals_edges():
     """The literal-masking substitution helper: doubled-quote escapes,
     adjacent literals, and unmatched content outside literals."""

@@ -27,8 +27,8 @@ def main():
     spark = get_session("stream-floor-decompose")
     from velostream_spark.streaming.runner import (
         _scratch_dir,
-        _sized_shuffle_partitions,
         _unique,
+        bounded_run_scope,
     )
     from velostream_spark.streaming.source import stream_table
 
@@ -51,7 +51,7 @@ def main():
         name = _unique("floor_decomp")
         ckpt = _scratch_dir(f"vs-ckpt-{name}-")
         out_dir = _scratch_dir(f"vs-out-{name}-")
-        with _sized_shuffle_partitions(sdf):
+        with bounded_run_scope(sdf):
             t0 = time.perf_counter()
             q = (
                 sdf.writeStream.format("parquet")
@@ -63,8 +63,8 @@ def main():
                 .start()
             )
             t1 = time.perf_counter()
-            q.awaitTermination(300)
-            t2 = time.perf_counter()
+        q.awaitTermination(300)
+        t2 = time.perf_counter()
         seg("start()", t1 - t0)
         seg("await", t2 - t1)
         prog = q.recentProgress

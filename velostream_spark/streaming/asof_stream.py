@@ -15,7 +15,12 @@ Semantics are the STRICT as-of: attach the latest right with ``rt < t``
 (not ≤). That choice is what makes incremental finalization airtight:
 with delay-0 watermarks, a left row at t is emittable exactly when
 ``watermark >= t`` — every future right arrival has ``rt >= watermark
->= t`` and can never satisfy ``rt < t``. (The INCLUSIVE form can never
+>= t`` and can never satisfy ``rt < t``. Watermarks are in ms, so "the
+watermark reached t" means it reached t's millisecond: a right row in
+that same millisecond but before t that only arrives in a LATER
+micro-batch is not seen (the watermark cannot order events inside its
+millisecond), which is what lets a bounded run flush the lefts of its
+final millisecond at all. (The INCLUSIVE form can never
 finalize its newest rows: a future right with ``rt == t`` is always
 admissible at ``watermark == t``, so a bounded run would hold back the
 corpus-max rows forever. DuckDB's ASOF JOIN accepts ``>`` as well as
@@ -110,16 +115,16 @@ def asof_join_stream_stream(
                 rights = _dedup_rights(rights, tb_idx)
                 pending.sort(key=lambda p: p[0])
 
-        wm_us = state.getCurrentWatermarkMs() * 1_000
-        out_rows, rights, pending = _flush(rights, pending, wm_us, len(payload_cols))
+        wm_ms = state.getCurrentWatermarkMs()
+        out_rows, rights, pending = _flush(rights, pending, wm_ms * 1_000, len(payload_cols))
 
         if pending or rights:
             state.update((pickle.dumps((rights, pending), protocol=4),))
             if pending:
-                due_ms = pending[0][0] // 1_000
+                due_ms = _due_ms(pending[0][0])
             else:
                 due_ms = rights[-1][0] // 1_000 + retention_ms
-            state.setTimeoutTimestamp(max(due_ms, state.getCurrentWatermarkMs() + 1))
+            state.setTimeoutTimestamp(max(due_ms, wm_ms, 1))
         else:
             state.remove()
 
@@ -152,17 +157,29 @@ def _dedup_rights(rights: list[tuple], tb_idx: int) -> list[tuple]:
     return dedup
 
 
+def _due_ms(t_us: int) -> int:
+    """Event-time timeout for a pending left at ``t_us``: Spark times a
+    key out once the watermark is strictly ABOVE the timestamp, and the
+    left is due once the watermark reaches its millisecond."""
+    return t_us // 1_000 - 1
+
+
 def _flush(rights, pending, wm_us, n_payload):
     """Emit every pending left the watermark has reached (strict as-of:
     future rights have rt >= wm >= t, never < t) and prune rights to
-    everything >= wm plus the single latest row below it."""
+    everything >= wm plus the single latest row below it.
+
+    ``wm_us`` is a ms watermark in µs. A left is reached once the
+    watermark reaches its MILLISECOND: comparing its µs against the
+    watermark's first µs would hold back every left past the final
+    millisecond's first µs forever."""
     import bisect
 
     out_rows: list[tuple] = []
     still: list[tuple] = []
     rts = [r[0] for r in rights]
     for t_us, lid in pending:
-        if t_us <= wm_us:
+        if t_us // 1_000 <= wm_us // 1_000:
             i = bisect.bisect_left(rts, t_us) - 1  # latest rt < t
             payload = rights[i][1] if i >= 0 else (None,) * n_payload
             out_rows.append((lid, t_us, payload))
@@ -298,18 +315,18 @@ def asof_join_stream_stream_bucketed(
                     pending.sort(key=lambda p: p[0])
                     st[k] = (rights, pending)
 
-        wm_us = state.getCurrentWatermarkMs() * 1_000
+        wm_ms = state.getCurrentWatermarkMs()
         all_out, out_keys, earliest_pending, newest_rt = _bucket_flush(
-            st, wm_us, retention_ms * 1_000, len(payload_cols)
+            st, wm_ms * 1_000, retention_ms * 1_000, len(payload_cols)
         )
 
         if st:
             state.update((pickle.dumps(st, protocol=4),))
             if earliest_pending is not None:
-                due_ms = earliest_pending // 1_000
+                due_ms = _due_ms(earliest_pending)
             else:
                 due_ms = newest_rt // 1_000 + retention_ms
-            state.setTimeoutTimestamp(max(due_ms, state.getCurrentWatermarkMs() + 1))
+            state.setTimeoutTimestamp(max(due_ms, wm_ms, 1))
         else:
             state.remove()
 

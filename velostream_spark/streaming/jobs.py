@@ -10,6 +10,12 @@ server/processors/transactional.rs:36-40), and progress metrics
 (``lastProgress`` ≈ the reference's @metric annotations). PAUSE maps to
 stop-with-checkpoint; RESUME restarts the writer from the same checkpoint —
 exactly-once resumes where it left off.
+
+Every start goes through the runner's bounded-run scope: an availableNow
+job gets its state partitions sized from its input, and a manager built
+without a ``checkpoint_root`` — whose mkdtemp root no other process
+writes — checkpoints through the FileSystem-based manager, while a
+caller-supplied root keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -22,6 +28,8 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+from velostream_spark.streaming.runner import bounded_run_scope
 
 #: build() -> streaming DataFrame; re-invoked on RESUME (plans are not
 #: serializable across stop/start, so jobs are declared by a builder fn).
@@ -87,6 +95,8 @@ class StreamJobManager:
 
     def __init__(self, spark: SparkSession, checkpoint_root: str | None = None):
         self.spark = spark
+        #: the root is this manager's own mkdtemp (see the module docstring)
+        self._own_root = checkpoint_root is None
         self.checkpoint_root = checkpoint_root or tempfile.mkdtemp(prefix="vs-jobs-")
         self.jobs: dict[str, StreamJob] = {}
         #: job → ordered version history (ast.rs:344-352 DeployJob)
@@ -126,7 +136,8 @@ class StreamJobManager:
         return job
 
     def _start(self, job: StreamJob, query_name: str | None = None) -> None:
-        writer = job.build().writeStream
+        sdf = job.build()
+        writer = sdf.writeStream
         if job.foreach_batch is not None:
             writer = writer.foreachBatch(job.foreach_batch)
         else:
@@ -140,7 +151,12 @@ class StreamJobManager:
         )
         if job.trigger:
             writer = writer.trigger(**job.trigger)
-        job.query = writer.start()
+        with bounded_run_scope(
+            sdf,
+            own_checkpoint=self._own_root,
+            available_now=bool(job.trigger.get("availableNow")),
+        ):
+            job.query = writer.start()
         job.state = "running"
 
     def start(self, name: str) -> StreamJob:

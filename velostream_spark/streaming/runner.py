@@ -17,10 +17,13 @@ their outputs are small aggregates by construction.
 from __future__ import annotations
 
 import contextlib
+import functools
 import itertools
+import logging
 import math
 import os
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -93,92 +96,118 @@ def _stream_input_bytes(sdf: DataFrame) -> "int | None":
     return total if seen and total > 0 else None
 
 
-@contextlib.contextmanager
-def _sized_shuffle_partitions(sdf: DataFrame):
-    """Set spark.sql.shuffle.partitions from the stream's source size for
-    the duration of a bounded run (state partition count is captured at
-    query start), then restore the session value.
-
-    Assumes the session runs bounded streams SEQUENTIALLY (the bench and
-    tests do): the override is session-global while the run starts, so a
-    query planned concurrently on the same session would pick it up. Scope
-    via a cloned session (spark.newSession()) if that ever changes."""
-    spark = sdf.sparkSession
-    if _TARGET_PART_BYTES <= 0:
-        yield
-        return
-    n_bytes = _stream_input_bytes(sdf)
-    if n_bytes is None:
-        yield
-        return
-    try:
-        session_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        yield
-        return
-    n = min(session_n, max(1, math.ceil(n_bytes / _TARGET_PART_BYTES)))
-    # Hysteresis: only act when the sizing at least HALVES the partition
-    # count — a 29-for-32 rewrite cannot win anything but still perturbs
-    # the plan; the target of this sizing is the small-input regime where
-    # n collapses to a handful.
-    if n > session_n // 2:
-        yield
-        return
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(session_n))
-
-#: Checkpoint file manager for the runner's throwaway LOCAL checkpoints
-#: (r16, guide §5 — driver-side per-run fixed costs). Spark's default
-#: FileContext-based manager constructs a fresh FileContext +
-#: AbstractFileSystem per metadata log AND per state-store provider
-#: (FileContext has no instance cache), which a long-lived production
-#: query pays once but a bounded run-to-completion pays on EVERY run:
-#: measured ~40 ms per metadata op (latestOffset / walCommit /
-#: commitOffsets) and a large share of the stateful addBatch wall.
-#: FileSystemBasedCheckpointFileManager — Spark's own fallback manager —
-#: goes through the process-wide FileSystem CACHE instead: interleaved
-#: same-session A/B (tools/ckpt_fm_spot.py) measured the metadata trio
-#: 42/41/42 → 9/9/9 ms and whole-job walls 0.57 → 0.40 s (stateless) /
-#: 1.10 → 0.71 s (stateful dropDuplicates). The FileContext manager's
-#: stronger rename-without-overwrite atomicity exists to protect DURABLE
-#: checkpoints from concurrent zombie drivers; a fresh single-driver
-#: scratch dir per run (never resumed, deleted at exit) has no such
-#: writer, so this is scoped HERE — production jobs with their own
-#: checkpointLocation (streaming/jobs.py) keep Spark's default. Disable
-#: via $VS_STREAM_LOCAL_CKPT_FM=0.
+#: FileSystem-based checkpoint manager for checkpoints nobody else writes
+#: (r16, guide §5 — per-run fixed costs). Spark's default FileContext
+#: manager builds a fresh FileContext + AbstractFileSystem for every
+#: metadata log and every state-store provider (FileContext has no
+#: instance cache): a long-lived query pays that once, a bounded run pays
+#: it on every run — ~40 ms per metadata op (latestOffset / walCommit /
+#: commitOffsets) and most of a stateful commit. Spark's own
+#: FileSystemBasedCheckpointFileManager goes through the process-wide
+#: FileSystem cache instead: interleaved same-session A/B
+#: (tools/ckpt_fm_spot.py) measured the metadata trio 42/41/42 → 9/9/9 ms
+#: and whole-job walls 0.57 → 0.40 s (stateless) / 1.10 → 0.71 s
+#: (stateful dropDuplicates). What the FileContext manager adds is a
+#: rename that never overwrites, which matters only against a second,
+#: concurrent writer of the same checkpoint (a zombie driver). A
+#: checkpoint under a root this process created with mkdtemp — the
+#: runner's scratch dirs, a StreamJobManager built without a
+#: checkpoint_root — has no such writer, PAUSE/RESUME included; a
+#: caller-supplied root keeps Spark's default. Disable via
+#: $VS_STREAM_LOCAL_CKPT_FM=0.
 _FM_CONF = "spark.sql.streaming.checkpointFileManagerClass"
-_FM_FS_BASED = (
+#: Spark 4.x moved the class into the checkpointing package; 3.x keeps it
+#: in streaming. The first one this JVM can load wins.
+_FM_CANDIDATES = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
-    "FileSystemBasedCheckpointFileManager"
+    "FileSystemBasedCheckpointFileManager",
+    "org.apache.spark.sql.execution.streaming.FileSystemBasedCheckpointFileManager",
 )
 _LOCAL_CKPT_FM = os.environ.get("VS_STREAM_LOCAL_CKPT_FM", "1") != "0"
+_SHUFFLE_CONF = "spark.sql.shuffle.partitions"
+
+#: Serialises set → start() → restore: two overlapping scopes would
+#: otherwise restore each other's values and leave the session sized.
+_SCOPE_LOCK = threading.Lock()
+
+
+@functools.lru_cache(maxsize=None)
+def _fs_ckpt_manager(candidates: tuple[str, ...]) -> "str | None":
+    """The first of ``candidates`` this JVM can load, resolved once (PySpark
+    drives one JVM per process); None — Spark's default manager stays —
+    with one warning when none loads."""
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    for name in candidates:
+        try:
+            SparkContext._jvm.java.lang.Class.forName(name)  # type: ignore[union-attr]
+            return name
+        except Py4JError:
+            continue
+    logging.getLogger(__name__).warning(
+        "no FileSystem-based checkpoint manager among %s; bounded runs keep "
+        "Spark's default checkpoint file manager",
+        list(candidates),
+    )
+    return None
 
 
 @contextlib.contextmanager
-def _local_ckpt_file_manager(spark):
-    """Apply the FileSystem-based checkpoint manager for the duration of
-    one bounded run over a runner-owned local scratch checkpoint, then
-    restore the session value. Same sequential-session assumption as
-    :func:`_sized_shuffle_partitions`."""
-    if not _LOCAL_CKPT_FM:
-        yield
-        return
-    try:
-        prev = spark.conf.get(_FM_CONF, None)
-    except Exception:
-        yield
-        return
-    spark.conf.set(_FM_CONF, _FM_FS_BASED)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_FM_CONF)
-        else:
-            spark.conf.set(_FM_CONF, prev)
+def bounded_run_scope(
+    sdf: DataFrame, own_checkpoint: bool = True, available_now: bool = True
+):
+    """Session confs for ONE streaming query's ``writer.start()`` — wrap
+    that call only. The query clones its session inside ``start()`` and
+    keeps the clone's confs for its whole run, so the session values are
+    restored as soon as ``start()`` returns. A RESUME passes through the
+    scope again; its state keeps the partition count recorded in the
+    checkpoint's offset log.
+
+    - ``available_now``: size spark.sql.shuffle.partitions — and so the
+      state-store partition count — from the stream's source bytes.
+    - ``own_checkpoint``: the checkpoint sits under a root this process
+      made with mkdtemp, so the FileSystem-based manager applies.
+
+    Set and restore happen under one module lock. A batch query planned
+    on the same session while ``start()`` runs still sees the override."""
+    spark = sdf.sparkSession
+    n_bytes = (
+        _stream_input_bytes(sdf)
+        if available_now and _TARGET_PART_BYTES > 0
+        else None
+    )
+    fm = (
+        _fs_ckpt_manager(_FM_CANDIDATES)
+        if own_checkpoint and _LOCAL_CKPT_FM
+        else None
+    )
+    with _SCOPE_LOCK:
+        prev = {
+            _SHUFFLE_CONF: spark.conf.get(_SHUFFLE_CONF),
+            _FM_CONF: spark.conf.get(_FM_CONF, None),
+        }
+        overrides = {}
+        if n_bytes is not None:
+            session_n = int(prev[_SHUFFLE_CONF])
+            n = min(session_n, max(1, math.ceil(n_bytes / _TARGET_PART_BYTES)))
+            # Hysteresis: act only when the sizing at least HALVES the
+            # count — a 29-for-32 rewrite wins nothing but perturbs the
+            # plan; the target is the small-input regime.
+            if n <= session_n // 2:
+                overrides[_SHUFFLE_CONF] = str(n)
+        if fm is not None:
+            overrides[_FM_CONF] = fm
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k in overrides:
+                if prev[k] is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, prev[k])
 
 
 #: Throwaway checkpoints/sinks (unique per call, never resumed) go to tmpfs
@@ -230,36 +259,14 @@ def run_available_now(
     throwaway checkpoint per call, so repeated invocations (driver retries,
     bench steady-state) are independent."""
     name = _unique(query_name or "vs_stream")
-    ckpt = _scratch_dir(f"vs-ckpt-{name}-")
     if output_mode == "append":
         out_dir = _scratch_dir(f"vs-out-{name}-")
-        with _sized_shuffle_partitions(sdf), _local_ckpt_file_manager(
-            sdf.sparkSession
-        ):
-            q = (
-                sdf.writeStream.format("parquet")
-                .option("path", out_dir)
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(timeout_s)
+        writer = sdf.writeStream.format("parquet").option("path", out_dir)
+        _run_bounded(sdf, writer, name, output_mode, timeout_s)
         # Explicit schema: a zero-row run leaves no data files to infer from.
         return sdf.sparkSession.read.schema(sdf.schema).parquet(out_dir)
-    with _sized_shuffle_partitions(sdf), _local_ckpt_file_manager(
-        sdf.sparkSession
-    ):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
+    writer = sdf.writeStream.format("memory")
+    _run_bounded(sdf, writer, name, output_mode, timeout_s)
     return sdf.sparkSession.table(name)
 
 
@@ -274,19 +281,22 @@ def run_foreach_batch(
     the reference's DataWriter.write_batch loop (datasource/traits.rs:154);
     ``func(batch_df, batch_id)`` is invoked once per micro-batch."""
     name = _unique(query_name or "vs_feb")
-    ckpt = _scratch_dir(f"vs-ckpt-{name}-")
-    with _sized_shuffle_partitions(sdf), _local_ckpt_file_manager(
-        sdf.sparkSession
-    ):
-        q = (
-            sdf.writeStream.foreachBatch(func)
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
+    writer = sdf.writeStream.foreachBatch(func)
+    _run_bounded(sdf, writer, name, output_mode, timeout_s)
+
+
+def _run_bounded(sdf, writer, name, output_mode, timeout_s) -> None:
+    """Start ``writer`` on a fresh scratch checkpoint inside the
+    bounded-run scope and wait for its availableNow run to finish."""
+    writer = (
+        writer.queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", _scratch_dir(f"vs-ckpt-{name}-"))
+        .trigger(availableNow=True)
+    )
+    with bounded_run_scope(sdf):
+        q = writer.start()
+    q.awaitTermination(timeout_s)
 
 
 def max_event_time(spark: SparkSession, batch_df: DataFrame, ts_col: str):
