@@ -363,6 +363,20 @@ def test_ffd_packing_string_ids(spark):
     assert all(v <= 128 for v in fill.values())
 
 
+def test_gate_rows_dotted_and_backticked_names_match_where(spark):
+    # gate_rows resolves each column by name; a dot or a backtick in the
+    # name must not turn it into a nested-field reference or a parse error
+    df = spark.createDataFrame(
+        [(1, "a", 5), (2, None, -1), (3, "c", None), (4, "d", 9)],
+        "`a.b` INT, `x``y` STRING, n INT",
+    )
+    cond = (F.col("n") > 0) & F.col("`x``y`").isNotNull()
+    gated = textops.gate_rows(df, cond)
+    assert gated.columns == df.columns
+    assert sorted(gated.collect()) == sorted(df.where(cond).collect())
+    assert sorted(gated.collect()) == [(1, "a", 5), (4, "d", 9)]
+
+
 def test_corpus_stats_null_and_empty_text_parity(spark):
     """corpus_stats' empty_rate / token arithmetic handles NULL and
     empty-string docs identically on both engines (the bundled corpus has

@@ -549,6 +549,27 @@ def test_curation_pipeline_shuffles_never_carry_text(spark):
                 assert payload not in seg, (first, seg)
 
 
+def test_curation_pipeline_text_stage_runs_once(spark):
+    # global_shuffle's count pass and the main branch must share ONE dedup
+    # exchange, so the normalize/split/gate/md5 text stage runs once per
+    # execution. Read the FINAL adaptive plan of the collected DataFrame
+    # itself (a noop write would plan a separate execution).
+    df = all_queries()["curation_pipeline"].fn(spark, SF_SMOKE)
+    assert df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    assert adaptive.nodeName() == "AdaptiveSparkPlan", adaptive.toString()
+    lines = adaptive.executedPlan().toString().splitlines()
+    text_stages = [
+        ln
+        for ln in lines
+        if "Project [" in ln and "regexp_replace(lower(trim(text" in ln
+    ]
+    assert len(text_stages) == 1, "\n".join(lines)
+    assert any(
+        "ReusedExchange" in ln and "hashpartitioning(_fp" in ln for ln in lines
+    ), "\n".join(lines)
+
+
 def test_bpe_pair_counts_tiny_shuffle_topn(spark):
     # pair generation is map-side (explode + substring codegen, no Python);
     # the only exchange carries (pair, partial_count) — alphabet²-bounded

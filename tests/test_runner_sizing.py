@@ -292,3 +292,29 @@ def test_second_scope_waits_for_the_first(spark):
     t.join(30)
     assert not t.is_alive() and inside == [str(n)]
     assert spark.conf.get(SHUFFLE) == session_n
+
+
+def test_own_job_root_is_removed_by_the_exit_sweep(spark, monkeypatch):
+    """A manager's own mkdtemp root (under $TMPDIR) is registered with the
+    runner's exit sweep, so it does not outlive the process."""
+    import tempfile
+
+    monkeypatch.setattr(runner, "_SCRATCH_DIRS", [])
+    mgr = StreamJobManager(spark)
+    root = mgr.checkpoint_root
+    assert os.path.dirname(root) == tempfile.gettempdir()
+    os.makedirs(os.path.join(root, "job", "offsets"))
+    assert runner._SCRATCH_DIRS == [root]
+    runner._sweep_scratch()
+    assert not os.path.exists(root)
+
+
+def test_caller_job_root_survives_the_exit_sweep(spark, tmp_path, monkeypatch):
+    """A caller-supplied checkpoint root is never registered for removal."""
+    monkeypatch.setattr(runner, "_SCRATCH_DIRS", [])
+    root = tmp_path / "ckpt"
+    (root / "job").mkdir(parents=True)
+    StreamJobManager(spark, checkpoint_root=str(root))
+    assert runner._SCRATCH_DIRS == []
+    runner._sweep_scratch()
+    assert (root / "job").is_dir()

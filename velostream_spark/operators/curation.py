@@ -274,13 +274,15 @@ def global_shuffle(
     # Two-phase design (the zipWithIndex shape): the offsets branch is a
     # column-pruned count-only pass whose shuffle is 256 PARTIAL COUNTS
     # (map-side combined), the main branch shuffles the rows once. At
-    # 100 TB the count pass reads one column; a composed input re-executes
-    # its (pruned) lineage for that pass — compose-heavy callers should
-    # materialize their input first (see curation_pipeline). Exchange
-    # reuse can't merge the branches: column pruning narrows the offsets
-    # projection below its exchange, so the subtrees never canonicalize
-    # equal (verified; Spark also rewrites count(struct(...)) keep-alives
-    # back to count(1)).
+    # 100 TB the count pass reads one column. Over a composed input the
+    # count pass plans its own copy of the lineage, yet it reads the
+    # input's exchanges rather than re-running what lies below them: AQE
+    # reuses an exchange whose subtree canonicalizes equal in both
+    # branches. That holds only while the count pass still needs every
+    # column the exchange carries — otherwise pruning narrows its copy
+    # and the two no longer match (curation_pipeline keys its dedup
+    # window on (_fp, n_tokens) for this). A count(struct(...))
+    # keep-alive does not work: Spark rewrites it back to count(1).
     base = docs.select(
         F.col(id_col), *keep, F.coalesce(h, F.lit("")).alias("_h")
     ).withColumn("shard", F.substring("_h", 1, 2))

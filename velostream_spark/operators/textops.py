@@ -33,17 +33,16 @@ def gate_rows(df: DataFrame, cond: Column) -> DataFrame:
     the duplicated-evaluation disease, fixed without a non-determinism
     marker).
 
-    Columns resolve POSITIONALLY (``df[c]``, r16 ADVICE): name-string
-    resolution would read a dotted column name as a nested-field
-    reference. The wrapper alias is collision-checked against the input
-    columns."""
+    Columns resolve by name, so each name is backtick-quoted (any
+    backtick inside it doubled): unquoted, ``df["a.b"]`` reads a dotted
+    column name as a nested-field reference and fails to resolve. The
+    wrapper alias is collision-checked against the input columns."""
     kept = "_kept"
     while kept in df.columns:
         kept += "_"
+    cols = [df["`" + c.replace("`", "``") + "`"] for c in df.columns]
     return df.select(
-        F.explode(
-            F.when(cond, F.array(F.struct(*[df[c] for c in df.columns])))
-        ).alias(kept)
+        F.explode(F.when(cond, F.array(F.struct(*cols)))).alias(kept)
     ).select(f"{kept}.*")
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,8 @@ Every start goes through the runner's bounded-run scope: an availableNow
 job gets its state partitions sized from its input, and a manager built
 without a ``checkpoint_root`` — whose mkdtemp root no other process
 writes — checkpoints through the FileSystem-based manager, while a
-caller-supplied root keeps Spark's default.
+caller-supplied root keeps Spark's default. The manager's own root is
+removed at interpreter exit; a caller-supplied root never is.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from velostream_spark.streaming.runner import bounded_run_scope
+from velostream_spark.streaming.runner import bounded_run_scope, remove_at_exit
 
 #: build() -> streaming DataFrame; re-invoked on RESUME (plans are not
 #: serializable across stop/start, so jobs are declared by a builder fn).
@@ -95,9 +96,12 @@ class StreamJobManager:
 
     def __init__(self, spark: SparkSession, checkpoint_root: str | None = None):
         self.spark = spark
-        #: the root is this manager's own mkdtemp (see the module docstring)
+        #: the root is this manager's own mkdtemp (see the module docstring),
+        #: removed at interpreter exit; a caller-supplied root is kept
         self._own_root = checkpoint_root is None
-        self.checkpoint_root = checkpoint_root or tempfile.mkdtemp(prefix="vs-jobs-")
+        self.checkpoint_root = checkpoint_root or remove_at_exit(
+            tempfile.mkdtemp(prefix="vs-jobs-")
+        )
         self.jobs: dict[str, StreamJob] = {}
         #: job → ordered version history (ast.rs:344-352 DeployJob)
         self.versions: dict[str, list[JobVersion]] = {}

@@ -223,17 +223,22 @@ def _unique(prefix: str) -> str:
 
 
 def _scratch_dir(prefix: str) -> str:
-    d = tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH)
-    _SCRATCH_DIRS.append(d)
-    return d
+    return remove_at_exit(tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH))
 
 
-#: tmpfs holds RAM — sweep every scratch dir at interpreter exit (the old
-#: /tmp variant leaked them to disk, harmless; leaking RAM is not).
+#: tmpfs holds RAM — sweep every scratch dir at interpreter exit, and with
+#: them the checkpoint roots StreamJobManager makes for itself (under
+#: $TMPDIR, one per manager, which otherwise outlive the process).
 _SCRATCH_DIRS: list[str] = []
 
 
-def _sweep_scratch() -> None:  # pragma: no cover — exit hook
+def remove_at_exit(path: str) -> str:
+    """Register a directory this process created for removal at exit."""
+    _SCRATCH_DIRS.append(path)
+    return path
+
+
+def _sweep_scratch() -> None:  # the exit hook
     import shutil
 
     for d in _SCRATCH_DIRS:
