@@ -535,47 +535,6 @@ def test_asof_join_inside_cte(spark):
     assert rows == [("a", 20.0), ("b", 30.0)]
 
 
-def test_streaming_asof_ss_perkey_equals_bucketed(spark):
-    """The per-key and bucketed-state stateful forms share the same
-    ingest/flush helpers — equality pinned on real data."""
-    from pyspark.sql import functions as F
-
-    from tests.conftest import SF_SMOKE
-    from velostream_spark.streaming.asof_stream import asof_join_stream_stream
-    from velostream_spark.streaming.runner import run_available_now
-    from velostream_spark.streaming.source import stream_table
-
-    sdf = (
-        stream_table(spark, SF_SMOKE, "events")
-        .select(
-            "event_id",
-            "user_id",
-            F.timestamp_millis(F.unix_millis("ts")).alias("ts"),
-            F.when(F.col("event_id") % 10 == 0, "snap").otherwise("trade").alias("side"),
-            F.col("value").alias("snap_value"),
-            F.col("event_id").alias("snap_event_id"),
-        )
-        .withWatermark("ts", "0 seconds")
-    )
-    perkey = run_available_now(
-        asof_join_stream_stream(
-            sdf, key_col="user_id", time_col="ts", side_col="side",
-            left_side="trade", id_col="event_id",
-            payload_cols=["snap_value", "snap_event_id"],
-            tiebreak_col="snap_event_id",
-        ),
-        "append",
-        "asof_ss_perkey_pin",
-    )
-    got_perkey = sorted(map(tuple, perkey.collect()))
-    from velostream_spark.registry import all_queries
-
-    got_bucketed = sorted(
-        map(tuple, all_queries()["streaming_asof_ss"].fn(spark, SF_SMOKE).collect())
-    )
-    assert got_perkey == got_bucketed and len(got_perkey) > 100
-
-
 def test_asof_right_key_name_collision_resolved(spark):
     """ADVICE r11: ON l.uid = r.user_id where the RIGHT relation ALSO has
     its own uid column — the key rename pre-moves right's uid aside
@@ -834,17 +793,12 @@ def test_streaming_asof_ss_flushes_final_sub_ms_left_row(spark, tmp_path):
     """Regression: the watermark is in ms, so a left row past the first µs
     of the final millisecond (here the corpus-max event, 500 µs into its
     ms, plus a quote 100 µs into that same ms) used to stay pending
-    forever — a bounded run dropped it. Both stateful forms (the SQL
-    route's bucketed operator and the per-key one) must equal DuckDB's
-    strict ASOF JOIN, every left row included."""
+    forever — a bounded run dropped it. The SQL route's stateful
+    operator must equal DuckDB's strict ASOF JOIN, every left row
+    included."""
     import datetime as dt
 
     import duckdb
-    from pyspark.sql import functions as F
-
-    from velostream_spark.streaming.asof_stream import asof_join_stream_stream
-    from velostream_spark.streaming.runner import run_available_now
-    from velostream_spark.streaming.source import stream_parquet
 
     base = dt.datetime(2024, 1, 1)
     us = lambda n: dt.timedelta(microseconds=n)  # noqa: E731
@@ -875,24 +829,6 @@ def test_streaming_asof_ss_flushes_final_sub_ms_left_row(spark, tmp_path):
     )
     got = sorted((r["trade_id"], r["px"]) for r in spark.table("sub_ms_ss").collect())
     assert got == want
-
-    usrc = str(tmp_path / "union")
-    tdf.select("trade_id", "k", "ts", F.lit("L").alias("side"),
-               F.lit(None).cast("double").alias("px")).unionByName(
-        qdf.select(F.col("qid").alias("trade_id"), "k", "ts",
-                   F.lit("R").alias("side"), "px")
-    ).write.parquet(usrc)
-    sdf = stream_parquet(spark, usrc, schema=spark.read.parquet(usrc).schema)
-    perkey = run_available_now(
-        asof_join_stream_stream(
-            sdf.withWatermark("ts", "0 seconds"), key_col="k", time_col="ts",
-            side_col="side", left_side="L", id_col="trade_id",
-            payload_cols=["px"], tiebreak_col="px",
-        ),
-        "append",
-        "sub_ms_perkey",
-    )
-    assert sorted((r["trade_id"], r["asof_px"]) for r in perkey.collect()) == want
 
 
 def test_sub_outside_literals_edges():

@@ -516,58 +516,77 @@ def test_multi_source_sql_app(spark, tmp_path):
     assert eng.tables["by_name"].get_record("globex")["total"] == 15.0
 
 
-def test_streaming_csas_rows_window(spark, tmp_path):
-    """SQL ROWS WINDOW through the STREAMING path: the dialect captures the
-    OVER-spec and the engine routes it to the applyInPandasWithState op
-    (batch execution of the same SQL uses the frame rewrite — both checked
-    against each other here)."""
+def _ticks_csv(tmp_path) -> str:
     src_dir = tmp_path / "in"
     src_dir.mkdir()
     rows = "\n".join(
-        f"{i % 3},{i},{round(0.5 * i + (i % 7), 2)}" for i in range(60)
+        f"T{i:03d},{i % 3},{i},{round(0.5 * i + (i % 7), 2)}" for i in range(60)
     )
-    (src_dir / "t.csv").write_text("sym,seq,price\n" + rows + "\n")
-    eng = SqlEngine(spark)
-    sql = f"""
-        CREATE STREAM ma AS
-        SELECT sym, seq,
+    (src_dir / "t.csv").write_text("trade_id,sym,seq,price\n" + rows + "\n")
+    return (
+        f"WITH ('ticks.type' = 'file_source', 'ticks.path' = '{src_dir}', "
+        "'ticks.format' = 'csv')"
+    )
+
+
+def test_streaming_csas_rows_window(spark, tmp_path):
+    """SQL ROWS WINDOW through the STREAMING path: the dialect captures the
+    OVER-spec and the engine routes it to the applyInPandasWithState op.
+    The statement is honoured as written — WHERE filters rows before the
+    buffer, and the SELECT list (a non-key column, a computed column, the
+    window columns) comes out in order with the names, types and values
+    the batch execution of the same SQL (frame rewrite path) gives."""
+    with_clause = _ticks_csv(tmp_path)
+    body = """
+        SELECT trade_id, sym, seq, price * 2 AS px2,
                AVG(price) OVER (ROWS WINDOW BUFFER 5 ROWS
                                 PARTITION BY sym ORDER BY seq) AS avg_p,
                LAG(price) OVER (ROWS WINDOW BUFFER 5 ROWS
                                 PARTITION BY sym ORDER BY seq) AS prev_p
         FROM ticks
-        WITH ('ticks.type' = 'file_source', 'ticks.path' = '{src_dir}',
-              'ticks.format' = 'csv');
+        WHERE price > 10
     """
-    eng.execute_streaming(sql)
-    got = (
-        spark.table("ma")
-        .toPandas()
-        .sort_values(["sym", "seq"])
-        .reset_index(drop=True)
-    )
-    # batch execution of the same statement (frame rewrite path)
-    batch = (
-        SqlEngine(spark)
-        .execute(sql.replace("CREATE STREAM ma AS", "").split("WITH (")[0]
-                 if False else
-                 f"""
+    SqlEngine(spark).execute_streaming(f"CREATE STREAM ma AS {body} {with_clause}")
+    got = spark.table("ma")
+    batch = SqlEngine(spark).execute(f"{body} {with_clause}")
+    assert got.columns == ["trade_id", "sym", "seq", "px2", "avg_p", "prev_p"]
+    assert got.dtypes == batch.dtypes
+
+    def rows(df):
+        return sorted(
+            tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+            for r in df.collect()
+        )
+
+    want = rows(batch)
+    assert len(want) == 45  # 15 of the 60 ticks fail the WHERE
+    assert rows(got) == want
+
+
+@pytest.mark.parametrize(
+    "tail,clause",
+    [
+        ("JOIN ticks t2 ON ticks.seq = t2.seq", "JOIN"),
+        ("GROUP BY trade_id, sym, seq, price", "GROUP BY"),
+        ("WHERE price > 10 ORDER BY seq", "ORDER BY"),
+        ("LIMIT 5", "LIMIT"),
+    ],
+)
+def test_streaming_csas_rows_window_rejects_unhonoured_clause(
+    spark, tmp_path, tail, clause
+):
+    """A clause the per-record ROWS WINDOW route cannot honour raises a
+    ValueError naming it, instead of being dropped silently."""
+    with_clause = _ticks_csv(tmp_path)
+    sql = f"""
+        CREATE STREAM mb AS
         SELECT sym, seq,
                AVG(price) OVER (ROWS WINDOW BUFFER 5 ROWS
-                                PARTITION BY sym ORDER BY seq) AS avg_p,
-               LAG(price) OVER (ROWS WINDOW BUFFER 5 ROWS
-                                PARTITION BY sym ORDER BY seq) AS prev_p
-        FROM ticks
-        WITH ('ticks.type' = 'file_source', 'ticks.path' = '{src_dir}',
-              'ticks.format' = 'csv');
-        """)
-        .toPandas()
-        .sort_values(["sym", "seq"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == 60 == len(batch)
-    assert got["avg_p"].round(9).equals(batch["avg_p"].round(9))
-    assert got["prev_p"].fillna(-1).round(9).equals(batch["prev_p"].fillna(-1).round(9))
+                                PARTITION BY sym ORDER BY seq) AS avg_p
+        FROM ticks {tail} {with_clause}
+    """
+    with pytest.raises(ValueError, match=clause):
+        SqlEngine(spark).execute_streaming(sql)
 
 
 def test_avro_file_source_with_registry_sql(spark, tmp_path):

@@ -23,11 +23,7 @@ from velostream_spark.session import load_tables
 from velostream_spark.streaming.emit import EmitMode, default_emit_mode, output_mode_for
 from velostream_spark.streaming.jobs import StreamJobManager
 from velostream_spark.streaming.late_data import DeadLetterSplitter
-from velostream_spark.streaming.rows_window import (
-    rows_window_batch,
-    rows_window_stream,
-    rows_window_stream_bucketed,
-)
+from velostream_spark.streaming.rows_window import rows_window_batch, rows_window_stream
 from velostream_spark.streaming.runner import run_available_now, run_foreach_batch
 from velostream_spark.streaming.source import stream_csv, stream_parquet
 
@@ -89,13 +85,14 @@ def test_output_mode_mapping(emit, window, agg, expected):
 
 def test_rows_window_state_carries_across_batches(spark, tmp_path):
     """ROWS WINDOW over 4 micro-batches == batch window functions over the
-    whole input: proves the buffer state (applyInPandasWithState) survives
-    batch boundaries exactly like the reference's ring buffer."""
+    whole input: proves the bucketed buffer state (applyInPandasWithState)
+    survives batch boundaries exactly like the reference's ring buffer."""
     ev = _events(spark).select("user_id", "event_id", "value")
     src = _write_chunks(spark, ev, str(tmp_path / "chunks"), 4, "event_id")
     sdf = stream_parquet(spark, src, schema=ev.schema, max_files_per_trigger=1)
     aggs = [
         ("moving_avg", "avg"),
+        ("moving_sum", "sum"),
         ("moving_min", "min"),
         ("buffer_n", "count"),
         ("prev_value", "lag"),
@@ -113,108 +110,72 @@ def test_rows_window_state_carries_across_batches(spark, tmp_path):
     got = got.sort_values(["user_id", "event_id"]).reset_index(drop=True)
     want = want.sort_values(["user_id", "event_id"]).reset_index(drop=True)
     assert len(got) == len(want) > 0
-    for col in ("moving_avg", "moving_min", "prev_value", "first_in_buffer"):
+    for col in ("moving_avg", "moving_sum", "moving_min", "prev_value",
+                "first_in_buffer"):
         assert got[col].round(9).equals(want[col].round(9)), col
     assert got["buffer_n"].equals(want["buffer_n"].astype("int64"))
     assert got["row_num"].equals(want["row_num"])
 
 
+def _buffer_full_rows(per_key, buffer: int) -> int:
+    """Rows a buffer_full run emits: each key's records from the
+    ``buffer``-th on."""
+    return int((per_key["count"] - (buffer - 1)).clip(lower=0).sum())
+
+
 def test_rows_window_buffer_full_emission(spark, tmp_path):
     """EmitMode::BufferFull: rows emitted only once the per-key buffer holds
-    buffer_size rows (reference ast.rs:567-575)."""
+    buffer_size rows (reference ast.rs:567-575), across 2 micro-batches,
+    equal to the batch twin."""
     ev = _events(spark).select("user_id", "event_id", "value")
     src = _write_chunks(spark, ev, str(tmp_path / "chunks"), 2, "event_id")
     sdf = stream_parquet(spark, src, schema=ev.schema, max_files_per_trigger=1)
+    aggs = [("buffer_n", "count"), ("moving_avg", "avg")]
     got = run_available_now(
         rows_window_stream(
-            sdf, ["user_id"], "event_id", "value", 5,
-            [("buffer_n", "count")], emit="buffer_full",
+            sdf, ["user_id"], "event_id", "value", 5, aggs, emit="buffer_full"
         ),
         "append",
         "rw_bufferfull",
-    ).toPandas()
+    ).toPandas().sort_values(["user_id", "event_id"]).reset_index(drop=True)
+    want = rows_window_batch(
+        ev, ["user_id"], "event_id", "value", 5, aggs, emit="buffer_full"
+    ).toPandas().sort_values(["user_id", "event_id"]).reset_index(drop=True)
     assert (got["buffer_n"] == 5).all()
-    per_user = _events(spark).groupBy("user_id").count().toPandas()
-    expected_rows = int((per_user["count"] - 4).clip(lower=0).sum())
-    assert len(got) == expected_rows
-
-
-def test_rows_window_bucketed_parity_multibatch(spark, tmp_path):
-    """Bucketed-state form == per-key form == batch twin over 4 micro-batches
-    (the graded streaming_rows_window entry runs the bucketed form — this
-    pins it against both alternates, state carry-over included)."""
-    ev = _events(spark).select("user_id", "event_id", "value")
-    src = _write_chunks(spark, ev, str(tmp_path / "chunks"), 4, "event_id")
-    aggs = [
-        ("moving_avg", "avg"),
-        ("moving_sum", "sum"),
-        ("moving_min", "min"),
-        ("buffer_n", "count"),
-        ("prev_value", "lag"),
-        ("first_in_buffer", "first"),
-        ("row_num", "row_number"),
-    ]
-
-    def run(form, tag):
-        sdf = stream_parquet(spark, src, schema=ev.schema, max_files_per_trigger=1)
-        out = run_available_now(
-            form(sdf, ["user_id"], "event_id", "value", 5, aggs),
-            "append",
-            tag,
-        ).toPandas()
-        return out.sort_values(["user_id", "event_id"]).reset_index(drop=True)
-
-    got_b = run(rows_window_stream_bucketed, "rw_bkt")
-    got_k = run(rows_window_stream, "rw_key")
-    want = (
-        rows_window_batch(_events(spark), ["user_id"], "event_id", "value", 5, aggs)
-        .toPandas()
-        .sort_values(["user_id", "event_id"])
-        .reset_index(drop=True)
-    )
-    assert len(got_b) == len(got_k) == len(want) > 0
-    for col in ("moving_avg", "moving_sum", "moving_min", "prev_value",
-                "first_in_buffer"):
-        assert got_b[col].round(9).equals(want[col].round(9)), col
-        assert got_b[col].round(9).equals(got_k[col].round(9)), col
-    for col in ("buffer_n", "row_num"):
-        assert got_b[col].equals(want[col].astype("int64")), col
-        assert got_b[col].equals(got_k[col].astype("int64")), col
+    per_user = ev.groupBy("user_id").count().toPandas()
+    assert len(got) == len(want) == _buffer_full_rows(per_user, 5) > 0
+    assert got["event_id"].equals(want["event_id"])
+    assert got["moving_avg"].round(9).equals(want["moving_avg"].round(9))
 
 
 def test_rows_window_bucketed_multicol_buffer_full(spark, tmp_path):
-    """Bucketed form with a multi-column partition key and
-    emit='buffer_full' matches the per-key form across micro-batches
-    (ADVICE r2: these paths were previously untested)."""
-    ev = _events(spark).select("user_id", "event_type", "event_id", "value")
+    """A multi-column partition key with emit='buffer_full' across
+    micro-batches matches the batch twin, one row per record from each
+    (user_id, event_type) key's 4th record on."""
+    keys = ["user_id", "event_type"]
+    ev = _events(spark).select(*keys, "event_id", "value")
     src = _write_chunks(spark, ev, str(tmp_path / "chunks"), 3, "event_id")
     aggs = [("moving_avg", "avg"), ("buffer_n", "count"), ("row_num", "row_number")]
-
-    def run(form, tag):
-        sdf = stream_parquet(spark, src, schema=ev.schema, max_files_per_trigger=1)
-        out = run_available_now(
-            form(
-                sdf, ["user_id", "event_type"], "event_id", "value", 4,
-                aggs, emit="buffer_full",
-            ),
-            "append",
-            tag,
-        ).toPandas()
-        return out.sort_values(["user_id", "event_type", "event_id"]).reset_index(
-            drop=True
-        )
-
-    got_b = run(rows_window_stream_bucketed, "rw_bkt_mc")
-    got_k = run(rows_window_stream, "rw_key_mc")
-    assert len(got_b) == len(got_k) > 0
-    assert (got_b["buffer_n"] == 4).all()
-    assert got_b["moving_avg"].round(9).equals(got_k["moving_avg"].round(9))
-    assert got_b["row_num"].equals(got_k["row_num"].astype("int64"))
+    sdf = stream_parquet(spark, src, schema=ev.schema, max_files_per_trigger=1)
+    got = run_available_now(
+        rows_window_stream(sdf, keys, "event_id", "value", 4, aggs, emit="buffer_full"),
+        "append",
+        "rw_bkt_mc",
+    ).toPandas().sort_values([*keys, "event_id"]).reset_index(drop=True)
+    want = rows_window_batch(
+        ev, keys, "event_id", "value", 4, aggs, emit="buffer_full"
+    ).toPandas().sort_values([*keys, "event_id"]).reset_index(drop=True)
+    per_key = ev.groupBy(*keys).count().toPandas()
+    assert len(got) == len(want) == _buffer_full_rows(per_key, 4) > 0
+    assert (got["buffer_n"] == 4).all()
+    assert got["event_id"].equals(want["event_id"])
+    assert got["moving_avg"].round(9).equals(want["moving_avg"].round(9))
+    assert got["row_num"].equals(want["row_num"].astype("int64"))
 
 
 def test_rows_window_bucketed_null_keys(spark, tmp_path):
     """Null partition keys form their own group (like Spark's groupBy and
-    the per-key form) instead of crashing the object-array sort or being
+    the batch twin) instead of crashing the object-array sort or being
     silently dropped by pandas groupby (ADVICE r2 bug)."""
     rows = [
         (None, 1, 1.0), (7, 2, 2.0), (None, 3, 3.0), (7, 4, 4.0),
@@ -227,9 +188,7 @@ def test_rows_window_bucketed_null_keys(spark, tmp_path):
     aggs = [("moving_avg", "avg"), ("buffer_n", "count"), ("row_num", "row_number")]
     got = (
         run_available_now(
-            rows_window_stream_bucketed(
-                sdf, ["user_id"], "event_id", "value", 3, aggs
-            ),
+            rows_window_stream(sdf, ["user_id"], "event_id", "value", 3, aggs),
             "append",
             "rw_nulls",
         )
@@ -251,6 +210,46 @@ def test_rows_window_bucketed_null_keys(spark, tmp_path):
     nulls = got[got["user_id"].isna()].sort_values("event_id")
     assert list(nulls["row_num"]) == [1, 2, 3, 4]
     assert list(nulls["buffer_n"]) == [1, 2, 3, 3]
+
+
+def test_rows_window_coalesces_arrow_chunks_before_sorting(spark, tmp_path):
+    """One bucket's micro-batch delivered as several Arrow chunks, rows out
+    of order across them, must be sorted as ONE batch: sorting per chunk
+    would push rows into the ring buffer out of order_by order."""
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+    n = 240
+    perm = rng.permutation(n)
+    rows = [(int(i % 4), int(i), float(v)) for i, v in zip(perm, rng.randn(n)[perm])]
+    df = spark.createDataFrame(rows, "user_id long, event_id long, value double")
+    src = str(tmp_path / "shuffled")
+    df.coalesce(1).write.parquet(src)
+    aggs = [("moving_avg", "avg"), ("moving_min", "min"), ("prev_value", "lag")]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "16")  # 240 rows in one bucket → 15 chunks
+    try:
+        got = run_available_now(
+            rows_window_stream(
+                stream_parquet(spark, src, schema=df.schema),
+                ["user_id"], "event_id", "value", 4, aggs, buckets=1,
+            ),
+            "append",
+            "rw_chunks",
+        ).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    got = got.sort_values("event_id").reset_index(drop=True)
+    want = (
+        rows_window_batch(df, ["user_id"], "event_id", "value", 4, aggs)
+        .toPandas()
+        .sort_values("event_id")
+        .reset_index(drop=True)
+    )
+    assert list(got["event_id"]) == list(range(n))
+    for col in ("moving_avg", "moving_min", "prev_value"):
+        assert got[col].round(9).equals(want[col].round(9)), col
 
 
 def test_emit_changes_changelog_converges(spark, tmp_path):
@@ -463,58 +462,11 @@ def test_streaming_session_join_matches_batch_twin(spark, tmp_path):
     emission) == the batch co-sessionization composition, across 3
     time-ordered micro-batches — open-session state survives batch
     boundaries and pairs split across batches are still found exactly once
-    (reference coordinator.rs:101-102 session co-windowing)."""
+    (reference coordinator.rs:101-102 session co-windowing). Runs with
+    buckets=1 (every key shares one state blob — maximum collision stress)
+    and buckets=8, with in-bucket key GC along the way."""
     from velostream_spark.queries.joins import session_join
     from velostream_spark.streaming.session_join import session_pair_join_stream
-
-    ev = _events(spark).where(F.col("event_type").isin("click", "view")).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    src = _write_chunks(spark, ev, str(tmp_path / "chunks"), 3, "ts")
-    sdf = stream_parquet(
-        spark, src, schema=ev.schema, max_files_per_trigger=1
-    ).withWatermark("ts", "0 seconds")
-    got = (
-        run_available_now(
-            session_pair_join_stream(
-                sdf,
-                key_col="user_id",
-                time_col="ts",
-                id_col="event_id",
-                side_col="event_type",
-                left_side="click",
-                right_side="view",
-                gap_minutes=30,
-                left_out="click_id",
-                right_out="view_id",
-            ),
-            "append",
-            "session_join_multibatch",
-        )
-        .toPandas()
-        .sort_values(["click_id", "view_id"])
-        .reset_index(drop=True)
-    )
-    want = (
-        session_join(spark, SF_SMOKE)
-        .toPandas()
-        .sort_values(["click_id", "view_id"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(want) > 0
-    for col in ("click_id", "view_id", "user_id"):
-        assert got[col].equals(want[col]), col
-    assert got["session_start"].equals(want["session_start"])
-
-
-def test_streaming_session_join_bucketed_parity(spark, tmp_path):
-    """Bucketed-state session join == per-key form == batch twin over
-    multi-batch input, including a buckets=1 run (all keys share one blob —
-    maximum collision stress) and in-bucket key GC along the way."""
-    from velostream_spark.queries.joins import session_join
-    from velostream_spark.streaming.session_join import (
-        session_pair_join_stream_bucketed,
-    )
 
     ev = _events(spark).where(F.col("event_type").isin("click", "view")).select(
         "user_id", "event_id", "ts", "event_type"
@@ -532,7 +484,7 @@ def test_streaming_session_join_bucketed_parity(spark, tmp_path):
         ).withWatermark("ts", "0 seconds")
         got = (
             run_available_now(
-                session_pair_join_stream_bucketed(
+                session_pair_join_stream(
                     sdf,
                     key_col="user_id",
                     time_col="ts",
@@ -546,7 +498,7 @@ def test_streaming_session_join_bucketed_parity(spark, tmp_path):
                     buckets=buckets,
                 ),
                 "append",
-                f"session_join_bucketed_{buckets}",
+                f"session_join_{buckets}",
             )
             .toPandas()
             .sort_values(["click_id", "view_id"])
@@ -591,17 +543,19 @@ def _ooo_session_rows():
     return batch1, batch2
 
 
-def _run_ooo(spark, tmp_path, form, **kw):
+def test_session_join_out_of_order_bucketed(spark, tmp_path):
+    """A late event within the watermark delay arriving AFTER newer events
+    must extend its original session — and a late bridging event must MERGE
+    two open sessions, emitting the cross pairs. late_slack must hold
+    sessions open for the watermark delay so late events can extend or
+    bridge them."""
     import os
 
-    from velostream_spark.streaming.session_join import (
-        session_pair_join_stream,
-        session_pair_join_stream_bucketed,
-    )
+    from velostream_spark.streaming.session_join import session_pair_join_stream
 
     schema = "user_id long, event_id long, ts timestamp, event_type string"
     batch1, batch2 = _ooo_session_rows()
-    d = str(tmp_path / f"ooo_{form}_{kw.get('buckets', 0)}")
+    d = str(tmp_path / "ooo")
     os.makedirs(d)
     for i, rows in enumerate((batch1, batch2)):
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
@@ -618,12 +572,7 @@ def _run_ooo(spark, tmp_path, form, **kw):
     sdf = stream_parquet(
         spark, merged, max_files_per_trigger=1
     ).withWatermark("ts", "2 hours")
-    fn = (
-        session_pair_join_stream
-        if form == "per_key"
-        else session_pair_join_stream_bucketed
-    )
-    pairs = fn(
+    pairs = session_pair_join_stream(
         sdf,
         key_col="user_id",
         time_col="ts",
@@ -634,34 +583,13 @@ def _run_ooo(spark, tmp_path, form, **kw):
         gap_minutes=30,
         left_out="click_id",
         right_out="view_id",
-        **kw,
+        buckets=4,
+        late_slack_minutes=120,
     )
-    out = run_available_now(pairs, "append", f"ooo_{form}_{kw.get('buckets', 0)}")
-    return sorted(
-        (int(r.click_id), int(r.view_id)) for r in out.collect()
-    )
-
-
-EXPECTED_OOO_PAIRS = sorted(
-    (c, v) for c in (1, 4, 5) for v in (2, 3, 6, 7)
-)
-
-
-def test_session_join_out_of_order_per_key(spark, tmp_path):
-    """A late event within the watermark delay arriving AFTER newer events
-    must extend its original session — and a late bridging event must MERGE
-    two open sessions, emitting the cross pairs. Per-key form."""
-    got = _run_ooo(spark, tmp_path, "per_key")
-    assert got == EXPECTED_OOO_PAIRS
-
-
-def test_session_join_out_of_order_bucketed(spark, tmp_path):
-    """Same contract for the bucketed form: late_slack must hold sessions
-    open for the watermark delay so late events can extend/bridge them."""
-    got = _run_ooo(
-        spark, tmp_path, "bucketed", buckets=4, late_slack_minutes=120
-    )
-    assert got == EXPECTED_OOO_PAIRS
+    out = run_available_now(pairs, "append", "ooo_session")
+    got = sorted((int(r.click_id), int(r.view_id)) for r in out.collect())
+    # one merged session {1..7}: clicks {1,4,5} × views {2,3,6,7}
+    assert got == sorted((c, v) for c in (1, 4, 5) for v in (2, 3, 6, 7))
 
 
 def test_streaming_curation_dedups_across_micro_batches(spark, tmp_path):

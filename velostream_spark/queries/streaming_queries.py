@@ -19,10 +19,7 @@ from pyspark.sql import functions as F
 
 from velostream_spark.registry import query, tables
 from velostream_spark.streaming.emit import EmitMode, output_mode_for
-from velostream_spark.streaming.rows_window import (
-    rows_window_stream,  # noqa: F401 — per-key form, used by SQL engine tests
-    rows_window_stream_bucketed,
-)
+from velostream_spark.streaming.rows_window import rows_window_stream
 from velostream_spark.streaming.runner import run_available_now
 from velostream_spark.streaming.source import stream_table
 
@@ -208,13 +205,11 @@ def streaming_session_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Custom stateful op (streaming/session_join.py): open-session state via
     applyInPandasWithState, pairs emitted eagerly as the later element
-    arrives. Bucketed-state form: Python entered per hash bucket, not per
-    user (the high-key-cardinality path, like streaming_rows_window);
-    per-key twin + batch twin pinned by the parity test.
+    arrives. Bucketed state: Python entered per hash bucket, not per user
+    (like streaming_rows_window); pinned against the batch twin by the
+    parity test.
     """
-    from velostream_spark.streaming.session_join import (
-        session_pair_join_stream_bucketed,
-    )
+    from velostream_spark.streaming.session_join import session_pair_join_stream
 
     sdf = (
         stream_table(spark, sf_dir, "events")
@@ -222,7 +217,7 @@ def streaming_session_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_id", "ts", "event_type")
         .withWatermark("ts", "0 seconds")
     )
-    pairs = session_pair_join_stream_bucketed(
+    pairs = session_pair_join_stream(
         sdf,
         key_col="user_id",
         time_col="ts",
@@ -258,13 +253,13 @@ def streaming_rows_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROWS WINDOW BUFFER 10 ROWS PARTITION BY user_id (reference
     WindowSpec::Rows ast.rs:617-652, rows.rs:30-45) — the per-record
     streaming analytic window as an applyInPandasWithState stateful op,
-    in its bucketed-state form (state keyed by hash bucket, per-user ring
-    buffers inside — Python entered per bucket, not per user, so per-call
-    overhead doesn't scale with key cardinality). Emits one row per input
-    record with moving aggregates over the last-10-rows buffer;
+    with bucketed state (state keyed by hash bucket, per-user ring buffers
+    inside — Python entered per bucket, not per user, so per-call overhead
+    doesn't scale with key cardinality). Emits one row per input record
+    with moving aggregates over the last-10-rows buffer;
     EmitMode::EveryRecord."""
-    sdf = stream_table(spark, sf_dir, "events")
-    out = rows_window_stream_bucketed(
+    sdf = stream_table(spark, sf_dir, "events").select("user_id", "event_id", "value")
+    out = rows_window_stream(
         sdf,
         partition_by=["user_id"],
         order_by="event_id",
@@ -280,63 +275,6 @@ def streaming_rows_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     ).withColumn("moving_avg", F.round("moving_avg", 6))
     return run_available_now(out, "append", "rows_window")
-
-
-@query(
-    "streaming_rows_window_tws",
-    oracle="""
-    SELECT user_id, event_id, CAST(value AS DOUBLE) AS value,
-           ROUND(AVG(value) OVER w, 6)  AS moving_avg,
-           MIN(value) OVER w            AS moving_min,
-           MAX(value) OVER w            AS moving_max,
-           COUNT(value) OVER w          AS buffer_n
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-                 ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-    """,
-    tags=("streaming", "rows-window", "velostream-specific", "stateful", "tws"),
-)
-def streaming_rows_window_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROWS WINDOW on the Spark-4 ``transformWithStateInPandas`` path
-    (streaming/rows_window_tws.py: RocksDB-backed state, native per-key
-    timers) — the forward-looking twin of ``streaming_rows_window``, same
-    semantics, same oracle.
-
-    DOCUMENTED FALLBACK (README 'transformWithStateInPandas status'): the
-    TWS state server needs ``google.protobuf``, which this container lacks
-    (no installs). When that import is absent the entry routes to the
-    ``applyInPandasWithState`` twin — processor-level parity between the
-    two is pinned in tests/test_rows_window_tws.py, so the values this
-    entry verifies are the values TWS produces wherever it can start."""
-    try:
-        import google.protobuf  # noqa: F401  (TWS state-server dependency)
-
-        tws_available = True
-    except ImportError:
-        tws_available = False
-    sdf = stream_table(spark, sf_dir, "events")
-    kwargs = dict(
-        partition_by=["user_id"],
-        order_by="event_id",
-        value_col="value",
-        buffer_size=10,
-        aggs=[
-            ("moving_avg", "avg"),
-            ("moving_min", "min"),
-            ("moving_max", "max"),
-            ("buffer_n", "count"),
-        ],
-    )
-    if tws_available:
-        from velostream_spark.streaming.rows_window_tws import (
-            rows_window_stream_tws,
-        )
-
-        out = rows_window_stream_tws(sdf, **kwargs)
-    else:
-        out = rows_window_stream_bucketed(sdf, **kwargs)
-    out = out.withColumn("moving_avg", F.round("moving_avg", 6))
-    return run_available_now(out, "append", "rows_window_tws")
 
 
 @query(
@@ -1006,14 +944,11 @@ def streaming_asof_ss(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator). Duplicate right timestamps resolve by max event_id,
     the batch oracle's max_by convention, inside the operator's state
     walk (a pre-aggregation would be a second stateful op in one query,
-    which Spark disallows). Bucketed-state form: Python is entered per
-    hash bucket per micro-batch, not per user (the session_join /
-    rows_window high-cardinality pattern — measured 8-9x on this entry);
-    the per-key twin shares the same ingest/flush helpers and is
-    equality-pinned in pytest."""
-    from velostream_spark.streaming.asof_stream import (
-        asof_join_stream_stream_bucketed,
-    )
+    which Spark disallows). Bucketed state: Python is entered per hash
+    bucket per micro-batch, not per user (the session_join / rows_window
+    high-cardinality pattern — measured 8-9x on this entry against a
+    per-key state layout)."""
+    from velostream_spark.streaming.asof_stream import asof_join_stream_stream
 
     sdf = (
         stream_table(spark, sf_dir, "events")
@@ -1029,7 +964,7 @@ def streaming_asof_ss(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("ts", "0 seconds")
     )
-    out = asof_join_stream_stream_bucketed(
+    out = asof_join_stream_stream(
         sdf,
         key_col="user_id",
         time_col="ts",

@@ -168,8 +168,8 @@ _LOADED = False
 #: streaming_interval_join, streaming_dedup, streaming_group_by_final,
 #: dialect_rows_window_over, dialect_functions_select, ngram_jaccard_pairs,
 #: dedup_canonical, rolling_fingerprint, multimodal_frame_sample,
-#: ann_brute_force_topk. (streaming_rows_window_tws stays ungated: its
-#: state server needs google.protobuf, absent here — README exemptions.)
+#: ann_brute_force_topk. (The ungated transformWithStateInPandas ROWS
+#: WINDOW entry is gone: its state server needs google.protobuf.)
 #:
 #: ROTATION batch 4 (round 7): the FINAL 9 never-officially-gated entries
 #: take slots, completing the program — after this round every catalog

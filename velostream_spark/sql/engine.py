@@ -2409,8 +2409,8 @@ class SqlEngine:
 
     def _build_asof_stream_stream(self, sql: str, spec) -> DataFrame:
         """ASOF JOIN where BOTH sides are streams: routed to the stateful
-        stream-stream operator (streaming/asof_stream.py, bucketed-state
-        form — Python entered per hash bucket, watermark-finalized).
+        stream-stream operator (streaming/asof_stream.py — bucketed state,
+        Python entered per hash bucket, watermark-finalized).
         Contract: exactly ONE equality key; the STRICT form (l.ts > r.ts
         — an inclusive as-of can never finalize its newest rows against a
         watermark, a future right with rt == t stays admissible forever);
@@ -2422,9 +2422,7 @@ class SqlEngine:
         them unchanged."""
         from pyspark.sql.types import TimestampType
 
-        from velostream_spark.streaming.asof_stream import (
-            asof_join_stream_stream_bucketed,
-        )
+        from velostream_spark.streaming.asof_stream import asof_join_stream_stream
 
         if len(spec.keys) != 1:
             raise NotImplementedError(
@@ -2476,7 +2474,7 @@ class SqlEngine:
             F.lit(True).alias("__velo_p__m"),
         )
         u = l_side.unionByName(r_side).withWatermark("__velo_ts", "0 seconds")
-        out = asof_join_stream_stream_bucketed(
+        out = asof_join_stream_stream(
             u,
             key_col="__velo_k",
             time_col="__velo_ts",
@@ -2668,10 +2666,20 @@ class SqlEngine:
         return sdf
 
     def _build_rows_window_stream(self, st: Statement) -> DataFrame:
-        """SQL ROWS WINDOW specs → streaming.rows_window stateful op. All
-        specs in one statement must share buffer/partition/order (one
-        buffer per OVER spec family, as in the reference's per-clause
-        buffer)."""
+        """SQL ROWS WINDOW → the streaming.rows_window stateful op, honouring
+        the statement: WHERE filters rows before they enter the buffer,
+        only the source columns the statement references ride the shuffle,
+        and the SELECT list is evaluated over the op's output with the
+        names and types the batch path of the same SQL gives. All specs in
+        one statement must share buffer/partition/order (one buffer per
+        OVER spec family, as in the reference's per-clause buffer). A
+        clause this per-record route over one source cannot honour raises
+        instead of being dropped."""
+        from velostream_spark.sql.dialect import (
+            _blank_nested,
+            _match_paren,
+            _split_top_level,
+        )
         from velostream_spark.streaming.rows_window import rows_window_stream
 
         specs = st.rows_window_aggs
@@ -2690,19 +2698,101 @@ class SqlEngine:
                 "streaming ROWS WINDOW needs PARTITION BY and exactly one "
                 "ORDER BY column"
             )
-        src_m = re.search(r"(?is)\bFROM\s+([a-zA-Z_]\w*)", st.select_sql)
-        if not src_m:
-            raise ValueError("cannot find source table for ROWS WINDOW stream")
-        sdf = self.spark.table(src_m.group(1))
-        aggs = [(s.out, s.fn, s.col) for s in specs if s.col] + [
-            (s.out, s.fn, None) for s in specs if not s.col
-        ]
-        value_col = next((s.col for s in specs if s.col), None)
-        if value_col is None:
+        sql = st.select_sql.strip().rstrip(";")
+        flat = _blank_nested(sql)  # outer query only: nested text blanked
+        for pat, clause in (
+            (r"^\s*SELECT\s+DISTINCT\b", "SELECT DISTINCT"),
+            (r"\bJOIN\b", "JOIN"),
+            (r"\bGROUP\s+BY\b", "GROUP BY"),
+            (r"\bHAVING\b", "HAVING"),
+            (r"\bORDER\s+BY\b", "ORDER BY"),
+            (r"\bLIMIT\b", "LIMIT"),
+            (r"\b(?:UNION|INTERSECT|EXCEPT)\b", "UNION/INTERSECT/EXCEPT"),
+        ):
+            if re.search("(?is)" + pat, flat):
+                raise ValueError(
+                    f"streaming ROWS WINDOW cannot honour {clause}: the "
+                    "route is one per-record operator over one source"
+                )
+        m = re.match(
+            r"(?is)^\s*SELECT\s+(?P<items>.*?)\s+FROM\s+(?P<src>[A-Za-z_]\w*)"
+            r"(?:\s+(?:AS\s+)?(?!WHERE\b)(?P<alias>[A-Za-z_]\w*))?"
+            r"\s*(?:\bWHERE\b.*)?$",
+            flat,
+        )
+        if not m:
+            raise ValueError(
+                "streaming ROWS WINDOW needs SELECT ... FROM <source> "
+                "[[AS] alias] [WHERE ...]"
+            )
+        src = self.spark.table(m["src"])
+        by_lower = {c.lower(): c for c in src.columns}
+
+        def source_col(name: str | None) -> str | None:
+            if not name:
+                return None
+            c = by_lower.get(name.split(".")[-1].strip("`").lower())
+            if c is None:
+                raise ValueError(f"streaming ROWS WINDOW: unknown column {name!r}")
+            return c
+
+        # Each `fn(col) OVER (...)` becomes a reference to the op's output
+        # column for the spec captured at the same position.
+        call = re.compile(r"(?is)\b\w+\s*\(\s*([\w.`]*)\s*\)\s*OVER\s*\(")
+        items: list[str] = []
+        k = 0
+        for item in _split_top_level(sql[m.start("items") : m.end("items")]):
+            if re.fullmatch(r"\s*(?:\w+\.)?\*\s*", item):
+                items += [f"`{c}`" for c in src.columns]
+                continue
+            pieces, pos = [], 0
+            while (cm := call.search(item, pos)) is not None:
+                if k >= len(specs) or source_col(cm.group(1)) != source_col(
+                    specs[k].col
+                ):
+                    break
+                pieces += [item[pos : cm.start()], f"__velo_rw{k}"]
+                pos = _match_paren(item, cm.end())
+                k += 1
+            pieces.append(item[pos:])
+            items.append("".join(pieces))
+        unquoted = re.sub(r"'(?:[^']|'')*'", "''", "\n".join(items))
+        if k != len(specs) or re.search(r"(?i)\bOVER\b", unquoted):
+            raise ValueError(
+                "streaming ROWS WINDOW: every OVER clause must be a "
+                "supported fn(col) OVER (ROWS WINDOW BUFFER n ROWS ...)"
+            )
+        cols = [source_col(s.col) for s in specs if s.col]
+        if not cols:
             raise ValueError("streaming ROWS WINDOW needs at least one fn(col)")
-        norm = [(out, fn, col or value_col) for out, fn, col in aggs]
-        return rows_window_stream(
-            sdf, part_by, order_by[0], value_col, buffers.pop(), norm
+        part_by = [source_col(c) for c in part_by]
+        order_col = source_col(order_by[0])
+        names = {
+            (q or w).lower()
+            for q, w in re.findall(r"`([^`]+)`|([A-Za-z_]\w*)", unquoted)
+        }
+        used = [c for c in src.columns if c.lower() in names]
+        carry = ", ".join(
+            f"`{c}`" for c in dict.fromkeys([*part_by, order_col, *cols, *used])
+        )
+        # the statement's own FROM/WHERE: rows are filtered before the buffer
+        pre = self.spark.sql(f"SELECT {carry} FROM {sql[m.start('src'):]}")
+        aggs = [
+            (f"__velo_rw{i}", s.fn, source_col(s.col) or cols[0])
+            for i, s in enumerate(specs)
+        ]
+        out = rows_window_stream(
+            pre, part_by, order_col, cols[0], buffers.pop(), aggs
+        )
+        res = out.alias(m["alias"] or m["src"]).selectExpr(*items)
+        # names and types of the batch path of the same SQL (analysed, not run)
+        want = self.spark.sql(sql).schema
+        tmp = [f"__velo_o{i}" for i in range(len(res.columns))]
+        return res.toDF(*tmp).select(
+            *[
+                F.col(t).cast(f.dataType).alias(f.name)
+                for t, f in zip(tmp, want, strict=True)
+            ]
         )
 
     def _select_df(self, st: Statement) -> DataFrame:

@@ -10,7 +10,16 @@ Modules:
 - ``emit``    — EMIT CHANGES / EMIT FINAL → Spark ``outputMode`` mapping
   (reference select.rs:490-501 defaults).
 - ``rows_window`` — the reference's ``ROWS WINDOW BUFFER n ROWS`` per-record
-  analytic window as a custom stateful op (``applyInPandasWithState``).
+  analytic window as a custom stateful op, plus its batch twin.
+- ``session_join`` — session-windowed stream-stream join (open sessions per
+  key, pairs emitted as the later element arrives).
+- ``asof_stream`` — stream-stream strict as-of join, finalized by the
+  watermark.
+
+  Each of the three is ONE ``applyInPandasWithState`` operator with
+  bucketed state: the state key is a hash bucket of the partition/join key,
+  each bucket's state is one pickled dict of its resident keys, so Python
+  is entered once per bucket per micro-batch, not once per key.
 - ``jobs``    — multi-job server analog (deploy/stop/pause/resume/SHOW) over
   ``spark.streams`` (reference server/stream_job_server.rs).
 - ``late_data`` — late-data strategies: Drop (watermark), UpdatePreviousWindow

@@ -26,117 +26,42 @@ admissible at ``watermark == t``, so a bounded run would hold back the
 corpus-max rows forever. DuckDB's ASOF JOIN accepts ``>`` as well as
 ``>=``, so the strict oracle is still its native operator.)
 
-Per-key state, pickled: ``rights`` — the (rt, payload) list pruned to
-all rows at-or-above the watermark PLUS the single latest row below it
-(only that one can ever win for a future left, since future lefts have
-``t >= watermark``); ``pending`` — left rows whose t the watermark has
-not reached. Duplicate right timestamps keep the row with the larger
-tiebreak column (the batch oracle's ``max_by`` convention). Event-time
-timeouts drive finalization: the timeout is set to the earliest pending
-left's t, so when the watermark passes it Spark re-invokes the key with
-``hasTimedOut`` and the due rows flush — including availableNow's
-trailing batches, which is how a bounded run emits EVERY left row and
-hash-matches the batch/DuckDB oracle exactly. Keys with no pending
-lefts carry a retention timeout (right-side state is reference data; it
-expires after ``retention_minutes`` without traffic, documented).
+State is bucketed: the physical state key is ``pmod(hash(key), buckets)``,
+so Python is entered once per bucket per micro-batch rather than once per
+join key (~0.5-1 ms each — a 48k-user batch would pay ~30-50 s of pure
+invocation overhead). Each bucket holds, in one pickled dict, every
+resident key's ``rights`` — the (rt, payload) list pruned to all rows
+at-or-above the watermark PLUS the single latest row below it (only that
+one can ever win for a future left, since future lefts have ``t >=
+watermark``) — and ``pending`` — left rows whose t the watermark has not
+reached. Duplicate right timestamps keep the row with the larger tiebreak
+column (the batch oracle's ``max_by`` convention). Event-time timeouts
+drive finalization: the bucket's timeout is set to its earliest pending
+left's t, so when the watermark passes it Spark re-invokes the bucket with
+``hasTimedOut`` and the due rows flush — including availableNow's trailing
+batches, which is how a bounded run emits EVERY left row and hash-matches
+the batch/DuckDB oracle exactly. A key with no pending lefts whose newest
+right saw no traffic for ``retention_minutes`` is evicted in the flush
+walk (right-side state is reference data).
 
 Scale: state per key is O(pending-within-watermark + rights-within-
 watermark + 1) — bounded by the watermark horizon, not the stream's
-lifetime; the exchange is ONE hash partition by key, the same shuffle
-the batch operator performs.
+lifetime; the exchange is ONE hash partition on the bucket column.
 """
 
 from __future__ import annotations
 
 import pickle
-from typing import Iterator
-
+import numpy as np
 import pandas as pd
-
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, TimestampType
 
-__all__ = ["asof_join_stream_stream", "asof_join_stream_stream_bucketed"]
+__all__ = ["asof_join_stream_stream"]
 
 
-def asof_join_stream_stream(
-    sdf: DataFrame,
-    key_col: str,
-    time_col: str,
-    side_col: str,
-    left_side: str,
-    id_col: str,
-    payload_cols: list[str],
-    tiebreak_col: str,
-    retention_minutes: int = 24 * 60,
-) -> DataFrame:
-    """``sdf`` (ONE union-tagged watermarked stream; ``side_col`` ==
-    ``left_side`` marks left rows, everything else is right rows) →
-    appended ``(id_col, key_col, time_col, asof_<payload>...)`` — one row
-    per left row, finalized when the watermark reaches its ``time_col``.
-
-    ``payload_cols`` are taken from right rows; ``tiebreak_col`` (one of
-    the payload columns) resolves duplicate right timestamps per key —
-    larger wins, the batch ``max_by`` convention."""
-    in_fields = {f.name: f.dataType for f in sdf.schema.fields}
-    out_schema = StructType(
-        [
-            StructField(id_col, in_fields[id_col]),
-            StructField(key_col, in_fields[key_col]),
-            StructField(time_col, TimestampType()),
-            *[StructField(f"asof_{p}", in_fields[p]) for p in payload_cols],
-        ]
-    )
-    state_schema = "blob binary"  # pickled (rights, pending)
-    tb_idx = payload_cols.index(tiebreak_col)
-    retention_ms = retention_minutes * 60_000
-
-    def func(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        rights: list[tuple] = []  # (rt_us, payload tuple), sorted by rt_us
-        pending: list[tuple] = []  # (t_us, lid), sorted by t_us
-        if state.exists:
-            rights, pending = pickle.loads(state.get[0])
-
-        if state.hasTimedOut and not pending:
-            # the RETENTION timer (no pending lefts): the key saw no
-            # traffic for retention_minutes — drop its reference data
-            # instead of re-arming forever
-            state.remove()
-            return
-
-        if not state.hasTimedOut:
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            if len(batch):
-                ts_us = (batch[time_col].astype("int64") // 1_000).to_numpy()
-                is_left = (batch[side_col] == left_side).to_numpy()
-                lids = batch[id_col].to_numpy()
-                pay = [batch[p].to_numpy() for p in payload_cols]
-                _ingest(rights, pending, range(len(batch)), ts_us, is_left, lids, pay, tb_idx)
-                rights = _dedup_rights(rights, tb_idx)
-                pending.sort(key=lambda p: p[0])
-
-        wm_ms = state.getCurrentWatermarkMs()
-        out_rows, rights, pending = _flush(rights, pending, wm_ms * 1_000, len(payload_cols))
-
-        if pending or rights:
-            state.update((pickle.dumps((rights, pending), protocol=4),))
-            if pending:
-                due_ms = _due_ms(pending[0][0])
-            else:
-                due_ms = rights[-1][0] // 1_000 + retention_ms
-            state.setTimeoutTimestamp(max(due_ms, wm_ms, 1))
-        else:
-            state.remove()
-
-        if out_rows:
-            yield _emit_frame(out_rows, key[0], id_col, key_col, time_col, payload_cols)
-
-    return sdf.groupBy(key_col).applyInPandasWithState(
-        func, out_schema, state_schema, "append", "EventTimeTimeout"
-    )
-
-
-def _ingest(rights, pending, idx, ts_us, is_left, lids, pay, tb_idx) -> None:
+def _ingest(rights, pending, idx, ts_us, is_left, lids, pay) -> None:
     for j in idx:
         if is_left[j]:
             pending.append((int(ts_us[j]), lids[j]))
@@ -194,7 +119,7 @@ def _flush(rights, pending, wm_us, n_payload):
 def _emit_frame(out_rows, key_vals, id_col, key_col, time_col, payload_cols):
     data = {
         id_col: pd.Series([r[0] for r in out_rows]),
-        key_col: key_vals if not isinstance(key_vals, list) else pd.Series(key_vals),
+        key_col: pd.Series(key_vals),
         time_col: pd.to_datetime(
             pd.Series([r[1] for r in out_rows], dtype="int64"), unit="us"
         ),
@@ -209,8 +134,7 @@ def _bucket_flush(st: dict, wm_us: int, retention_us: int, n_payload: int):
     state dict, IN PLACE. Returns ``(out_rows, out_keys, earliest_pending,
     newest_rt)`` for the caller's emission and timer re-arm.
 
-    Retention is per KEY, matching the per-key twin's contract: a key with
-    no pending lefts whose newest right saw no traffic for
+    Retention is per KEY: a key with no pending lefts whose newest right saw no traffic for
     ``retention_minutes`` is dead reference data and is evicted HERE, in
     the walk — a hot neighbour key in the same bucket can never keep it
     alive (r11 finding: a per-bucket timer alone grows state with
@@ -241,7 +165,7 @@ def _bucket_flush(st: dict, wm_us: int, retention_us: int, n_payload: int):
     return all_out, out_keys, earliest_pending, newest_rt
 
 
-def asof_join_stream_stream_bucketed(
+def asof_join_stream_stream(
     sdf: DataFrame,
     key_col: str,
     time_col: str,
@@ -253,28 +177,17 @@ def asof_join_stream_stream_bucketed(
     retention_minutes: int = 24 * 60,
     buckets: int | None = None,
 ) -> DataFrame:
-    """Bucketed-state form of :func:`asof_join_stream_stream` — the
-    high-key-cardinality path (the session_join/rows_window pattern):
-    ``applyInPandasWithState`` enters Python once per STATE KEY per
-    micro-batch (~0.5-1 ms each), so keying by user means a 48k-user
-    batch pays ~30-50 s of pure invocation overhead. The physical state
-    key here is ``pmod(hash(key), buckets)``: Python is entered
-    ``buckets`` times per batch, each bucket holds every resident key's
-    (rights, pending) in one pickled dict, and the per-key walk runs
-    in-process over sorted per-key slices. Semantics identical to the
-    per-key form (same _ingest/_dedup/_flush helpers, same watermark
-    finalization and timeout flush) — equality pinned in pytest; measured
-    8-9x on the bench entry (PERF.md)."""
-    import numpy as np
-    from pyspark.sql import functions as F
+    """``sdf`` (ONE union-tagged watermarked stream; ``side_col`` ==
+    ``left_side`` marks left rows, everything else is right rows) →
+    appended ``(id_col, key_col, time_col, asof_<payload>...)`` — one row
+    per left row, finalized when the watermark reaches its ``time_col``.
 
+    ``payload_cols`` are taken from right rows; ``tiebreak_col`` (one of
+    the payload columns) resolves duplicate right timestamps per key —
+    larger wins, the batch ``max_by`` convention. ``buckets`` defaults to
+    4× the session's shuffle partitions."""
     if buckets is None:
-        try:
-            buckets = 4 * int(
-                sdf.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except Exception:
-            buckets = 128
+        buckets = 4 * int(sdf.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     in_fields = {f.name: f.dataType for f in sdf.schema.fields}
     out_schema = StructType(
@@ -310,7 +223,7 @@ def asof_join_stream_stream_bucketed(
                 for a, b in zip(starts[:-1], starts[1:]):
                     k = keys[a]
                     rights, pending = st.get(k, ([], []))
-                    _ingest(rights, pending, range(a, b), ts_us, is_left, lids, pay, tb_idx)
+                    _ingest(rights, pending, range(a, b), ts_us, is_left, lids, pay)
                     rights = _dedup_rights(rights, tb_idx)
                     pending.sort(key=lambda p: p[0])
                     st[k] = (rights, pending)

@@ -6,25 +6,33 @@ as a custom stateful Spark op.
 Semantics: per partition key, a bounded ring buffer of the last ``n`` rows;
 for EVERY incoming record the analytic functions are evaluated over the
 buffer and a row is emitted (EmitMode::EveryRecord, ast.rs:567-575), or only
-once the buffer is full (EmitMode::BufferFull). Inactive partitions expire
-(RowExpirationMode, ast.rs:580-592). Multiple analytic functions may target
-different columns of the same buffer (as in one reference OVER clause list).
+once the buffer is full (EmitMode::BufferFull). Multiple analytic functions
+may target different columns of the same buffer (as in one reference OVER
+clause list). Each emitted row carries its input record's columns
+unchanged, followed by the analytic columns.
 
 Spark has no built-in per-record streaming window-function operator, so this
-is ``applyInPandasWithState``: state = one value buffer per referenced
-column (array<array<double>>) + a lifetime row counter; each micro-batch is
-processed *vectorized* (pandas rolling over state-prefix + batch, then the
-prefix sliced off) — no Python per-row loop. Emission cadence is per-record
-within each micro-batch, which converges to the reference's per-record
-stream when batches are small.
+is ``applyInPandasWithState`` with bucketed state: the physical state key is
+``pmod(hash(partition cols), buckets)``, and each bucket keeps every resident
+key's ring buffer (``n <= buffer`` rows × referenced columns, plus the key's
+lifetime row count) inside one pickled dict. Python is entered once per
+bucket per micro-batch, not once per key, and the per-key work is vectorised
+numpy across all keys of the bucket: rows are sorted by (key, order), keys
+are factorized to dense int codes (so null keys are just another code), and
+every rolling aggregate is computed over a masked ``sliding_window_view`` /
+prefix arithmetic — no per-row or per-key Python loop.
+Emission cadence is per-record within each micro-batch, which converges to
+the reference's per-record stream when batches are small.
 
 Scale: state per key is O(buffer_size × n_cols) doubles — independent of
-stream length; the shuffle is the groupBy(partition key) exchange only.
-Skewed keys bound their cost by the same O(buffer) state.
+stream length; the shuffle is the one exchange on the bucket column.
+Skewed keys bound their cost by the same O(buffer) state. ``rows_window_batch``
+is the bounded twin (native window functions, no Python).
 """
 
 from __future__ import annotations
 
+import pickle
 from typing import Iterator
 
 import numpy as np
@@ -68,38 +76,6 @@ def _normalize_aggs(aggs, value_col: str) -> list[tuple[str, str, str]]:
     return out
 
 
-def _agg_over_prefix(
-    fn: str, s: pd.Series, n_prev: int, buffer: int, cnt0: int
-) -> pd.Series:
-    """Evaluate ``fn`` over the last-``buffer`` rolling frame of ``s`` (state
-    prefix + batch), returning only the batch slice. All vectorized."""
-    roll = s.rolling(buffer, min_periods=1)
-    if fn == "avg":
-        out = roll.mean()
-    elif fn == "sum":
-        out = roll.sum()
-    elif fn == "min":
-        out = roll.min()
-    elif fn == "max":
-        out = roll.max()
-    elif fn == "count":
-        out = roll.count().astype("int64")
-    elif fn == "last":
-        out = s
-    elif fn == "lag":
-        out = s.shift(1)
-    elif fn == "first":
-        idx = np.maximum(np.arange(len(s)) - buffer + 1, 0)
-        out = pd.Series(s.to_numpy()[idx], index=s.index)
-    elif fn == "row_number":
-        # cnt0 = rows seen before the state prefix entered the buffer; the
-        # prefix occupies positions cnt0+1..cnt0+n_prev.
-        out = pd.Series(np.arange(1, len(s) + 1) + cnt0, index=s.index)
-    else:  # pragma: no cover
-        raise ValueError(f"unsupported rows-window fn: {fn}")
-    return out.iloc[n_prev:]
-
-
 def rows_window_stream(
     sdf: DataFrame,
     partition_by: list[str],
@@ -108,166 +84,46 @@ def rows_window_stream(
     buffer_size: int,
     aggs: list,
     emit: str = "every_record",
-    expire_after_ms: int | None = None,
+    buckets: int | None = None,
 ) -> DataFrame:
     """Streaming ROWS WINDOW over ``sdf``.
 
     ``aggs``: ``[(out_col, fn), ...]`` (over ``value_col``) or
     ``[(out_col, fn, col), ...]`` (per-agg column) with fn ∈ SUPPORTED_FNS.
-    Output = partition cols + order col + every referenced value col +
-    agg cols, one row per input record (``emit='every_record'``) or per
-    record once the buffer is full (``emit='buffer_full'``).
-    """
-    if emit not in ("every_record", "buffer_full"):
-        raise ValueError(f"unknown emit mode: {emit}")
-    specs = _normalize_aggs(aggs, value_col)
-    # ordered distinct value columns; value_col always present for output
-    # stability with the 2-tuple API
-    cols: list[str] = []
-    for c in [value_col] + [c for _, _, c in specs]:
-        if c not in cols:
-            cols.append(c)
-
-    # Project to the columns the op reads BEFORE the stateful exchange —
-    # the shuffle and the Arrow transfer to Python carry only key + order +
-    # referenced value columns, not the whole input row.
-    sdf = sdf.select(*dict.fromkeys([*partition_by, order_by, *cols]))
-
-    in_schema = dict(zip(sdf.schema.names, sdf.schema.fields))
-    out_fields = (
-        [in_schema[c] for c in partition_by]
-        + [in_schema[order_by]]
-        + [StructField(c, DoubleType()) for c in cols]
-        + [StructField(out, SUPPORTED_FNS[fn]) for out, fn, _ in specs]
-    )
-    out_schema = StructType(out_fields)
-    state_schema = "values array<array<double>>, cnt long"
-    buffer = buffer_size
-    emit_full = emit == "buffer_full"
-
-    def func(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            prev_lists, cnt = state.get
-            prev = {c: list(prev_lists[i]) for i, c in enumerate(cols)}
-        else:
-            prev, cnt = {c: [] for c in cols}, 0
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values(order_by, kind="mergesort")
-            series = {}
-            n_prev = {}
-            for c in cols:
-                vals = pdf[c].astype(float)
-                series[c] = pd.concat(
-                    [pd.Series(prev[c], dtype=float), vals], ignore_index=True
-                )
-                n_prev[c] = len(prev[c])
-            out = pd.DataFrame(
-                {
-                    **{c: key[i] for i, c in enumerate(partition_by)},
-                    order_by: pdf[order_by].to_numpy(),
-                    **{c: pdf[c].astype(float).to_numpy() for c in cols},
-                }
-            )
-            cnt0 = cnt - n_prev[cols[0]]
-            for out_col, fn, c in specs:
-                out[out_col] = _agg_over_prefix(
-                    fn, series[c], n_prev[c], buffer, cnt0
-                ).to_numpy()
-            cnt += len(pdf)
-            prev = {c: list(series[c].iloc[-buffer:]) for c in cols}
-            if emit_full:
-                # positions (lifetime) of this batch's rows
-                pos = np.arange(cnt - len(pdf) + 1, cnt + 1)
-                out = out[pos >= buffer]
-            if not out.empty:
-                yield out
-        state.update(([prev[c] for c in cols], cnt))
-        if expire_after_ms is not None:
-            state.setTimeoutDuration(expire_after_ms)
-
-    timeout = "ProcessingTimeTimeout" if expire_after_ms is not None else "NoTimeout"
-    return sdf.groupBy(*partition_by).applyInPandasWithState(
-        func, out_schema, state_schema, "append", timeout
-    )
-
-
-def rows_window_stream_bucketed(
-    sdf: DataFrame,
-    partition_by: list[str],
-    order_by: str,
-    value_col: str,
-    buffer_size: int,
-    aggs: list,
-    emit: str = "every_record",
-    expire_after_ms: int | None = None,
-    buckets: int | None = None,
-) -> DataFrame:
-    """ROWS WINDOW with **bucketed** state — the high-key-cardinality path.
-
-    ``applyInPandasWithState`` invokes the Python function once per KEY per
-    micro-batch; with millions of logical keys the per-call overhead (Arrow
-    chunk + pandas assembly, ~0.5 ms) dominates regardless of how little
-    data each key carries. Here the physical state key is
-    ``pmod(hash(partition cols), buckets)`` and each bucket keeps every
-    resident key's ring buffer inside one pickled dict, so Python is entered
-    ``buckets`` times per batch and the per-key work is vectorized numpy
-    across ALL keys in the bucket: rows are sorted by (key, order), keys are
-    factorized to dense int codes (so null keys are just another code — no
-    object-dtype compares), and every rolling aggregate is computed over a
-    masked ``sliding_window_view`` / prefix arithmetic — no per-key loops,
-    no pandas groupby in the hot path.
+    Output = every column of ``sdf``, unchanged, then the agg columns: one
+    row per input record (``emit='every_record'``) or per record once its
+    key's buffer is full (``emit='buffer_full'``). Every input column rides
+    the shuffle and the Arrow transfer to Python, so project ``sdf`` to the
+    columns the caller needs first.
 
     ``buckets`` defaults to 2× the session's shuffle partitions: enough
     buckets that hash collisions over partitions stay balanced (~2 buckets
     per task), few enough that per-bucket Python entry overhead stays
     amortized (measured: 64 buckets beats both 32 and 128 at 1.6M rows /
-    24K keys on 32 cores). Set it explicitly to trade blob size vs call overhead — each
-    bucket's state is one pickled dict of per-key ring buffers, rewritten
-    per touched bucket per batch, so at very high key cardinality raise
-    ``buckets`` until a bucket's resident keys fit executor memory
-    comfortably (state per key is O(buffer × n_cols) doubles).
-
-    Key expiry is handled inside the bucket (per-key last-seen pruning per
-    invocation) rather than by the state-store timeout.
-
-    Semantics are identical to ``rows_window_stream``; the parity tests pin
-    both against the batch twin / DuckDB oracle.
+    24K keys on 32 cores). Each bucket's state is one pickled dict of
+    per-key ring buffers, rewritten per touched bucket per batch, so at very
+    high key cardinality raise ``buckets`` until a bucket's resident keys
+    fit executor memory comfortably.
     """
-    import pickle
-    import time as _time
-
     if emit not in ("every_record", "buffer_full"):
         raise ValueError(f"unknown emit mode: {emit}")
     specs = _normalize_aggs(aggs, value_col)
-    cols: list[str] = []
-    for c in [value_col] + [c for _, _, c in specs]:
-        if c not in cols:
-            cols.append(c)
+    cols = list(dict.fromkeys(c for _, _, c in specs))  # buffered columns
+    carry = list(sdf.columns)
+    missing = [c for c in [*partition_by, order_by, *cols] if c not in carry]
+    if missing:
+        raise ValueError(f"rows window: input has no column(s) {missing}")
+    clash = [out for out, _, _ in specs if out in carry]
+    if clash:
+        raise ValueError(f"rows window: output column(s) {clash} already in input")
 
     if buckets is None:
-        try:
-            buckets = 2 * int(
-                sdf.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except Exception:
-            buckets = 64
+        buckets = 2 * int(sdf.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-    # Shuffle/Arrow carry only key + order + referenced value columns.
-    sdf = sdf.select(*dict.fromkeys([*partition_by, order_by, *cols]))
-
-    in_schema = dict(zip(sdf.schema.names, sdf.schema.fields))
-    out_fields = (
-        [in_schema[c] for c in partition_by]
-        + [in_schema[order_by]]
-        + [StructField(c, DoubleType()) for c in cols]
+    out_schema = StructType(
+        [*sdf.schema.fields]
         + [StructField(out, SUPPORTED_FNS[fn]) for out, fn, _ in specs]
     )
-    out_schema = StructType(out_fields)
     state_schema = "blob binary"
     buffer = buffer_size
     emit_full = emit == "buffer_full"
@@ -297,14 +153,10 @@ def rows_window_stream_bucketed(
             yield pd.concat(pending, ignore_index=True) if len(pending) > 1 else pending[0]
 
     def func(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        # state: {key: (np.ndarray[n<=buffer, n_cols] buffer, cnt, last_seen)}
+        # state: {key: (np.ndarray[n<=buffer, n_cols] buffer, cnt)}
         # null partition keys are normalized to None (hashable, stable
         # across batches — float NaN is not).
-        if state.hasTimedOut:  # pragma: no cover — buckets persist
-            state.remove()
-            return
         st: dict = pickle.loads(state.get[0]) if state.exists else {}
-        now = _time.time() * 1000.0
         n_cols = len(cols)
         for pdf in _coalesced(pdfs):
             # Stable sort groups equal keys contiguously (nulls last) with
@@ -457,11 +309,7 @@ def rows_window_stream_bucketed(
             rows = src[mask]  # pdf row index per emitted row (dtypes intact)
             out = pd.DataFrame(
                 {
-                    **{c: pdf[c].to_numpy()[rows] for c in pcols},
-                    order_by: pdf[order_by].to_numpy()[rows],
-                    **{
-                        c: all_vals[:, col_idx[c]][mask] for c in cols
-                    },
+                    **{c: pdf[c].to_numpy()[rows] for c in carry},
                     **{oc: r[mask] for oc, r in out_cols.items()},
                 }
             )
@@ -474,11 +322,9 @@ def rows_window_stream_bucketed(
             chunks = np.split(tail_vals, splits)
             new_cnt = base_cnt + total
             for gi, k in enumerate(uniq_keys):
-                st[k] = (chunks[gi], int(new_cnt[gi]), now)
+                st[k] = (chunks[gi], int(new_cnt[gi]))
             if not out.empty:
                 yield out
-        if expire_after_ms is not None:
-            st = {k: v for k, v in st.items() if now - v[2] <= expire_after_ms}
         if st:
             state.update((pickle.dumps(st, protocol=pickle.HIGHEST_PROTOCOL),))
         else:
@@ -504,18 +350,14 @@ def rows_window_batch(
     aggs: list,
     emit: str = "every_record",
 ) -> DataFrame:
-    """Batch twin of ``rows_window_stream`` — identical semantics via native
-    window functions (``ROWS BETWEEN buffer-1 PRECEDING AND CURRENT ROW``),
-    fully Catalyst-planned (WindowExec, no Python). Use this form whenever
-    the input is bounded; the streaming form exists for unbounded per-record
-    emission."""
+    """Batch twin of ``rows_window_stream`` — the same output (every input
+    column, then the agg columns) via native window functions (``ROWS
+    BETWEEN buffer-1 PRECEDING AND CURRENT ROW``), fully Catalyst-planned
+    (WindowExec, no Python). Use this form whenever the input is bounded;
+    the streaming form exists for unbounded per-record emission."""
     from pyspark.sql.window import Window
 
     specs = _normalize_aggs(aggs, value_col)
-    cols: list[str] = []
-    for c in [value_col] + [c for _, _, c in specs]:
-        if c not in cols:
-            cols.append(c)
     order_cols = [order_by] if isinstance(order_by, str) else list(order_by)
     w = Window.partitionBy(*partition_by).orderBy(*order_cols)
     frame = w.rowsBetween(-(buffer_size - 1), 0)
@@ -542,20 +384,11 @@ def rows_window_batch(
             return F.row_number().over(w).cast("long")
         raise ValueError(f"unsupported rows-window fn: {fn}")
 
-    base_cols = [
-        *partition_by,
-        *order_cols,
-        *[F.col(c).cast("double").alias(c) for c in cols],
-    ]
     agg_cols = [expr(fn, c).alias(out_col) for out_col, fn, c in specs]
     if emit == "buffer_full":
         return (
-            df.select(
-                *base_cols,
-                F.row_number().over(w).alias("_rn"),
-                *agg_cols,
-            )
+            df.select("*", F.row_number().over(w).alias("_rn"), *agg_cols)
             .where(F.col("_rn") >= buffer_size)
             .drop("_rn")
         )
-    return df.select(*base_cols, *agg_cols)
+    return df.select("*", *agg_cols)

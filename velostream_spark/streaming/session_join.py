@@ -9,16 +9,19 @@ co-sessionization).
 
 Spark has no built-in session-windowed stream-stream join (session windows
 exist only for aggregations), so this is a custom stateful operator
-(SURVEY §2 option (b)): ``applyInPandasWithState`` keyed by the join key.
+(SURVEY §2 option (b)): ``applyInPandasWithState`` with bucketed state. The
+physical state key is ``pmod(hash(key), buckets)``: Python is entered once
+per bucket per micro-batch (not once per join key, ~0.5 ms each), each
+bucket holds every resident key's open sessions in one pickled dict, and
+the per-key session walk runs in-process over contiguous per-key slices of
+the key-sorted batch.
 
 State per key = the list of OPEN sessions, each ``[start, last, lefts,
 rights]``.  Multiple sessions stay open simultaneously (like Spark's own
 session-window aggregation state) so an out-of-order event arriving WITHIN
-the watermark delay but AFTER a newer event still lands in the session it
+the allowed lateness but AFTER a newer event still lands in the session it
 belongs to — extending it, or BRIDGING two open sessions into one (the
-merge emits the cross pairs between the two member sets).  A session is
-truly closed only when the event-time watermark passes ``last + gap``,
-never merely because a later event crossed the gap — the reference's
+merge emits the cross pairs between the two member sets).  The reference's
 session strategy has the same late-extension contract
 (window_v2/strategies/session.rs "merge + late extension").
 
@@ -33,30 +36,31 @@ Pairs are emitted EAGERLY — when the later element of a pair arrives:
   emission (a later out-of-order event may retroactively extend the start
   the batch twin reports — hindsight an online operator doesn't have).
 
-Scale: state is O(open-session events per key) with the number of open
-sessions bounded by (event-time horizon − watermark)/gap + 1; expired keys
-are garbage-collected via event-time timeout once the watermark passes the
-NEWEST session's ``last + gap`` (at which point every older session has
-also expired).  The pair generation is inherently |L|×|R| per session —
-the session cap is the data's own session size, the same bound the
-reference's in-memory session buffer carries.
+Scale: sessions are garbage-collected inside the bucket against the
+bucket's own event clock — a session is retired once ``last + gap +
+late_slack`` falls behind the newest event time the bucket has seen, and a
+key with no open session leaves the dict — so state is bounded by the
+lateness horizon, not the stream's lifetime.  The pair generation is
+inherently |L|×|R| per session — the session cap is the data's own session
+size, the same bound the reference's in-memory session buffer carries.
 """
 
 from __future__ import annotations
 
 import pickle
-from typing import Callable, Iterator
+from typing import Callable
 
+import numpy as np
 import pandas as pd
-
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
 )
 
-__all__ = ["session_pair_join_stream", "session_pair_join_stream_bucketed"]
+__all__ = ["session_pair_join_stream"]
 
 
 def _walk_event(
@@ -116,145 +120,26 @@ def session_pair_join_stream(
     gap_minutes: int = 30,
     left_out: str = "left_id",
     right_out: str = "right_id",
-) -> DataFrame:
-    """``sdf`` (streaming, watermarked on ``time_col``) → appended pairs
-    ``(left_out, right_out, key_col, session_start)``.
-
-    ``side_col`` holds ``left_side`` / ``right_side`` markers; other rows
-    must be filtered out upstream.
-    """
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    in_fields = {f.name: f.dataType for f in sdf.schema.fields}
-    out_schema = StructType(
-        [
-            StructField(left_out, in_fields[id_col]),
-            StructField(right_out, in_fields[id_col]),
-            StructField(key_col, in_fields[key_col]),
-            StructField("session_start", TimestampType()),
-        ]
-    )
-    state_schema = "blob binary"  # pickled list of [start, last, lefts, rights]
-
-    def func(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # watermark passed the NEWEST session's expiry ⇒ all expired
-            state.remove()
-            return
-        sessions: list[list] = (
-            pickle.loads(state.get[0]) if state.exists else []
-        )
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values([time_col, id_col], kind="mergesort")
-        ts_us = (batch[time_col].astype("int64") // 1_000).to_numpy()
-        ids = batch[id_col].to_numpy()
-        sides = batch[side_col].to_numpy()
-
-        out_l: list[int] = []
-        out_r: list[int] = []
-        out_s: list[int] = []
-
-        def emit(left: int, right: int, start: int) -> None:
-            out_l.append(left)
-            out_r.append(right)
-            out_s.append(start)
-
-        for t, i, side in zip(ts_us, ids, sides):
-            _walk_event(
-                sessions, int(t), int(i), side == left_side, gap_us, emit
-            )
-
-        # event-time GC, two levels: sessions the watermark has passed are
-        # closed NOW (no in-delay event can still reach them — this is what
-        # keeps a hot key's state bounded by the watermark horizon, not by
-        # its lifetime), and the whole key dies via timeout once the
-        # watermark passes the newest session's expiry.
-        wm_ms = state.getCurrentWatermarkMs()
-        if wm_ms:
-            sessions = [s for s in sessions if (s[1] + gap_us) // 1_000 >= wm_ms]
-        if sessions:
-            state.update(
-                (pickle.dumps(sessions, protocol=pickle.HIGHEST_PROTOCOL),)
-            )
-            newest_last = max(s[1] for s in sessions)
-            # Spark requires the timeout strictly above the watermark
-            state.setTimeoutTimestamp(
-                max((newest_last + gap_us) // 1_000, wm_ms + 1)
-            )
-        else:
-            state.remove()
-
-        if out_l:
-            yield pd.DataFrame(
-                {
-                    left_out: pd.Series(out_l, dtype="int64"),
-                    right_out: pd.Series(out_r, dtype="int64"),
-                    key_col: key[0],
-                    "session_start": pd.to_datetime(
-                        pd.Series(out_s, dtype="int64"), unit="us"
-                    ),
-                }
-            )
-
-    return sdf.groupBy(key_col).applyInPandasWithState(
-        func, out_schema, state_schema, "append", "EventTimeTimeout"
-    )
-
-
-def session_pair_join_stream_bucketed(
-    sdf: DataFrame,
-    key_col: str,
-    time_col: str,
-    id_col: str,
-    side_col: str,
-    left_side: str,
-    right_side: str,
-    gap_minutes: int = 30,
-    left_out: str = "left_id",
-    right_out: str = "right_id",
     buckets: int | None = None,
     late_slack_minutes: int = 0,
 ) -> DataFrame:
-    """Bucketed-state form of ``session_pair_join_stream`` — the
-    high-key-cardinality path (same design as
-    ``rows_window.rows_window_stream_bucketed``).
+    """``sdf`` (streaming) → appended pairs ``(left_out, right_out,
+    key_col, session_start)``.
 
-    ``applyInPandasWithState`` enters Python once per state key per
-    micro-batch (~0.5 ms each: Arrow chunk + pandas assembly); with many
-    users that per-call overhead dominates the actual session walk. The
-    physical state key here is ``pmod(hash(key), buckets)``: Python is
-    entered ``buckets`` times per batch, each bucket holds every resident
-    key's open sessions in one pickled dict, and the per-key session walk
-    runs in-process over numpy-split per-key slices.
+    ``side_col`` holds ``left_side`` / ``right_side`` markers; other rows
+    must be filtered out upstream.
 
-    Key GC happens inside the bucket against the bucket's own event clock:
-    a session is retired once ``last + gap + late_slack`` falls behind the
-    bucket's max seen event time — set ``late_slack_minutes`` to the
-    source's watermark delay so out-of-order events within the delay can
-    still extend (or bridge) their session, exactly like the per-key form.
-
-    Semantics match ``session_pair_join_stream`` WHEN ``late_slack_minutes``
-    equals the source's watermark delay (the per-key form prunes against
-    the real watermark; this form only has the bucket's own event clock).
-    With the default slack of 0 the two agree for in-order streams — an
-    out-of-order extension arriving a batch late would find its session
-    already retired here. The parity test runs both forms plus the batch
-    twin on one input.
+    ``buckets`` defaults to 4× the session's shuffle partitions. Set
+    ``late_slack_minutes`` to the source's watermark delay: a session is
+    retired once ``last + gap + late_slack`` falls behind the bucket's max
+    seen event time, so with the default slack of 0 an out-of-order
+    extension arriving a batch late finds its session already retired.
     """
-    import numpy as np
-    from pyspark.sql import functions as F
-
     gap_us = gap_minutes * 60 * 1_000_000
     slack_us = late_slack_minutes * 60 * 1_000_000
 
     if buckets is None:
-        try:
-            buckets = 4 * int(
-                sdf.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except Exception:
-            buckets = 128
+        buckets = 4 * int(sdf.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     in_fields = {f.name: f.dataType for f in sdf.schema.fields}
     out_schema = StructType(
@@ -268,9 +153,6 @@ def session_pair_join_stream_bucketed(
     state_schema = "blob binary"
 
     def func(bucket_key, pdfs, state):
-        if state.hasTimedOut:  # pragma: no cover — buckets persist
-            state.remove()
-            return
         st: dict = pickle.loads(state.get[0]) if state.exists else {}
         out_l: list[int] = []
         out_r: list[int] = []
