@@ -148,6 +148,49 @@ def test_rows_window_buffer_full_emission(spark, tmp_path):
     assert got["moving_avg"].round(9).equals(want["moving_avg"].round(9))
 
 
+def test_rows_window_bucketed_parity_multibatch(spark, tmp_path):
+    """The bucketed buffer state gives the batch twin's answer whatever the
+    bucket count, over 4 micro-batches: buckets=1 (every key shares one
+    state blob — maximum collision stress) and buckets=8."""
+    ev = _events(spark).select("user_id", "event_id", "value")
+    src = _write_chunks(spark, ev, str(tmp_path / "chunks"), 4, "event_id")
+    aggs = [
+        ("moving_avg", "avg"),
+        ("moving_sum", "sum"),
+        ("moving_min", "min"),
+        ("buffer_n", "count"),
+        ("prev_value", "lag"),
+        ("first_in_buffer", "first"),
+        ("row_num", "row_number"),
+    ]
+    want = (
+        rows_window_batch(ev, ["user_id"], "event_id", "value", 5, aggs)
+        .toPandas()
+        .sort_values(["user_id", "event_id"])
+        .reset_index(drop=True)
+    )
+    for buckets in (1, 8):
+        sdf = stream_parquet(spark, src, schema=ev.schema, max_files_per_trigger=1)
+        got = (
+            run_available_now(
+                rows_window_stream(
+                    sdf, ["user_id"], "event_id", "value", 5, aggs, buckets=buckets
+                ),
+                "append",
+                f"rw_bkt_{buckets}",
+            )
+            .toPandas()
+            .sort_values(["user_id", "event_id"])
+            .reset_index(drop=True)
+        )
+        assert len(got) == len(want) > 0, buckets
+        for col in ("moving_avg", "moving_sum", "moving_min", "prev_value",
+                    "first_in_buffer"):
+            assert got[col].round(9).equals(want[col].round(9)), (buckets, col)
+        for col in ("buffer_n", "row_num"):
+            assert got[col].equals(want[col].astype("int64")), (buckets, col)
+
+
 def test_rows_window_bucketed_multicol_buffer_full(spark, tmp_path):
     """A multi-column partition key with emit='buffer_full' across
     micro-batches matches the batch twin, one row per record from each
@@ -462,11 +505,31 @@ def test_streaming_session_join_matches_batch_twin(spark, tmp_path):
     emission) == the batch co-sessionization composition, across 3
     time-ordered micro-batches — open-session state survives batch
     boundaries and pairs split across batches are still found exactly once
-    (reference coordinator.rs:101-102 session co-windowing). Runs with
-    buckets=1 (every key shares one state blob — maximum collision stress)
-    and buckets=8, with in-bucket key GC along the way."""
+    (reference coordinator.rs:101-102 session co-windowing)."""
     from velostream_spark.queries.joins import session_join
-    from velostream_spark.streaming.session_join import session_pair_join_stream
+
+    ev = _events(spark).where(F.col("event_type").isin("click", "view")).select(
+        "user_id", "event_id", "ts", "event_type"
+    )
+    src = _write_chunks(spark, ev, str(tmp_path / "chunks"), 3, "ts")
+    got = _session_join_multibatch(spark, src, ev.schema, None, "session_join_multibatch")
+    want = (
+        session_join(spark, SF_SMOKE)
+        .toPandas()
+        .sort_values(["click_id", "view_id"])
+        .reset_index(drop=True)
+    )
+    assert len(got) == len(want) > 0
+    for col in ("click_id", "view_id", "user_id"):
+        assert got[col].equals(want[col]), col
+    assert got["session_start"].equals(want["session_start"])
+
+
+def test_streaming_session_join_bucketed_parity(spark, tmp_path):
+    """The session join gives the batch twin's pairs whatever the bucket
+    count: buckets=1 (every key shares one state blob — maximum collision
+    stress) and buckets=8, with in-bucket key GC along the way."""
+    from velostream_spark.queries.joins import session_join
 
     ev = _events(spark).where(F.col("event_type").isin("click", "view")).select(
         "user_id", "event_id", "ts", "event_type"
@@ -479,35 +542,45 @@ def test_streaming_session_join_matches_batch_twin(spark, tmp_path):
         .reset_index(drop=True)
     )
     for buckets in (1, 8):
-        sdf = stream_parquet(
-            spark, src, schema=ev.schema, max_files_per_trigger=1
-        ).withWatermark("ts", "0 seconds")
-        got = (
-            run_available_now(
-                session_pair_join_stream(
-                    sdf,
-                    key_col="user_id",
-                    time_col="ts",
-                    id_col="event_id",
-                    side_col="event_type",
-                    left_side="click",
-                    right_side="view",
-                    gap_minutes=30,
-                    left_out="click_id",
-                    right_out="view_id",
-                    buckets=buckets,
-                ),
-                "append",
-                f"session_join_{buckets}",
-            )
-            .toPandas()
-            .sort_values(["click_id", "view_id"])
-            .reset_index(drop=True)
+        got = _session_join_multibatch(
+            spark, src, ev.schema, buckets, f"session_join_{buckets}"
         )
         assert len(got) == len(want) > 0, buckets
         for col in ("click_id", "view_id", "user_id"):
             assert got[col].equals(want[col]), (buckets, col)
         assert got["session_start"].equals(want["session_start"]), buckets
+
+
+def _session_join_multibatch(spark, src, schema, buckets, tag):
+    """Click/view session pairs of the streaming session join over the
+    time-ordered chunks in ``src``, sorted by (click_id, view_id)."""
+    from velostream_spark.streaming.session_join import session_pair_join_stream
+
+    sdf = stream_parquet(
+        spark, src, schema=schema, max_files_per_trigger=1
+    ).withWatermark("ts", "0 seconds")
+    return (
+        run_available_now(
+            session_pair_join_stream(
+                sdf,
+                key_col="user_id",
+                time_col="ts",
+                id_col="event_id",
+                side_col="event_type",
+                left_side="click",
+                right_side="view",
+                gap_minutes=30,
+                left_out="click_id",
+                right_out="view_id",
+                buckets=buckets,
+            ),
+            "append",
+            tag,
+        )
+        .toPandas()
+        .sort_values(["click_id", "view_id"])
+        .reset_index(drop=True)
+    )
 
 
 def _ooo_session_rows():
