@@ -24,10 +24,14 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
 import time
+from typing import Any, NamedTuple
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -192,8 +196,9 @@ AMORTIZED = {
     # (source wiring, checkpoint, state store, sink commit) — the same
     # stateful-streaming floor as the entries above. 16×, not 48×: their
     # 1× job walls (0.9-6 s) already dominate the floor at 16×
-    # (tools/scale_spot.py: interval 5.99→8.89 s, asof_ss 4.57→7.15 s,
-    # asof 1.80→2.21 s, range 1.09→1.09 s for 16× the rows), and 4-5 runs
+    # (PERF.md Round-12 delta scale spots: interval 5.99→8.89 s, asof_ss
+    # 4.57→7.15 s, asof 1.80→2.21 s, range 1.09→1.09 s for 16× the rows;
+    # re-measure with `tools/ab.py ENTRY --b-dir pool:16`), and 4-5 runs
     # of a 48× stream-stream join would add minutes of bench wall for no
     # extra information.
     "dialect_asof_stream": (("events",), 16),
@@ -201,7 +206,7 @@ AMORTIZED = {
     "dialect_range_stream": (("events",), 16),
     "dialect_interval_stream": (("events",), 16),
     # composed ASOF+GROUP BY: measured near-FLAT to 16x (3.47 -> 3.77 s,
-    # tools/decontam_ceiling-era spot in PERF.md round-13) — the wall is
+    # PERF.md Round-13 delta scale spots) — the wall is
     # the TWO-streaming-job floor, the exact shape amortization exists for
     "dialect_asof_groupby_stream": (("events",), 16),
     # stateless per-doc model inference — content-blind, so id-shift
@@ -243,8 +248,8 @@ AMORTIZED = {
     # documents/embeddings rep=1 layout normalization (r15-opt): the base
     # sf0.1 documents/embeddings files are also ONE parquet row group, so
     # every scan-side stage — regex tokenization, explode+aggregate, Arrow
-    # matmuls — ran in a single task. tools/layout_spot.py interleaved A/B
-    # (bench methodology: derive once, execute 4×, median) measured these
+    # matmuls — ran in a single task. An interleaved A/B (OPTIMIZATION_r15.md
+    # §6; re-measure with `tools/ab.py ENTRY --b-dir pool:1`) measured these
     # winners on the 16-file layout: bpe_encode 5.26×, quality_classifier
     # 2.84×, ann_brute_force 2.79×, gopher 2.68×, bpe_pair_counts 2.53×,
     # doc_chunking 2.23×, multimodal_frame_sample 1.74×, bigram_lm_grouped
@@ -268,7 +273,7 @@ AMORTIZED = {
     # normalization that previously LOST on them (0.57-0.86×, redundant
     # full-payload exchange) now wins — pii_scrub 1.66×, text_analysis
     # 1.39×, curation_pipeline 1.31×, span_dedup 1.28×, minhash_lsh_pairs
-    # 1.27×, repetition_filter 1.20× (tools/layout_spot.py, interleaved
+    # 1.27×, repetition_filter 1.20× (OPTIMIZATION_r15.md §6, interleaved
     # derive-once/execute-4 medians).
     "text_analysis": (("documents",), 1),
     "pii_scrub": (("documents",), 1),
@@ -353,7 +358,7 @@ _SHIFT_COLS = {
 #: matches the replica pool's long-standing multi-file rewrite; the tiny
 #: documents/embeddings tables (5 K / 2 K rows) measured fastest at 16
 #: files — 32 splits of 5 K rows put task overhead above the parallelism
-#: gain on several entries (tools/layout_spot.py A/B, medians of 4
+#: gain on several entries (OPTIMIZATION_r15.md §6 A/B, medians of 4
 #: bench-style runs per layout).
 _REP1_FILES = {"documents": 16, "embeddings": 16}
 
@@ -395,33 +400,37 @@ def _global_domain_max(spark, sf_dir: str) -> dict[str, int]:
     return dom_max
 
 
+def scratch_root(prefix: str) -> str:
+    """A fresh temp dir in /dev/shm when the host has one (the same scratch
+    the streaming runner uses): generated inputs then measure scan/decode,
+    not /tmp disk I/O. The caller removes it."""
+    import tempfile
+
+    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    return tempfile.mkdtemp(prefix=prefix, dir=shm)
+
+
 def build_replica_pool(
-    spark, sf_dir: str, needs: set[tuple[tuple, int]]
-) -> tuple[str, dict[tuple[tuple, int], str]]:
-    """Build every distinct (table, rep) replica ONCE into a pool, then
-    assemble each query's (tables, rep) directory from symlinks — no table
-    is ever written twice (lineitem×16 used to be materialized separately
-    for the exists- and in-subquery entries).
+    spark, sf_dir: str, needs: set[tuple[tuple, int]], root: str
+) -> dict[tuple[tuple, int], str]:
+    """Build every distinct (table, rep) replica ONCE into a pool under
+    ``root``, then assemble each query's (tables, rep) directory from
+    symlinks — no table is ever written twice (lineitem×16 used to be
+    materialized separately for the exists- and in-subquery entries).
 
     Replication shifts key columns per replica (joins and window partitions
     stay within-replica, so work scales linearly — the same method as
     PERF.md's scale-up table) with ONE global offset per key domain.
-    Returns (pool_root, {(tables, rep): dir}); rmtree(pool_root) cleans up
-    everything including the symlinked combo dirs.
+    Returns {(tables, rep): dir}; rmtree(root) cleans up everything
+    including the symlinked combo dirs.
     """
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from velostream_spark.session import load_tables
 
-    # Pool lives in /dev/shm when available (same scratch the streaming
-    # runner uses): replica reads measure scan/decode, not /tmp disk I/O.
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="vs-bench-pool-", dir=shm)
     table_reps = {(t, rep) for tables, rep in needs for t in tables}
     if not table_reps:
-        return root, {}
+        return {}
     dom_max = _global_domain_max(spark, sf_dir)
     dfs = load_tables(spark, sf_dir, register_views=False)
     replica_path: dict[tuple[str, int], str] = {}
@@ -468,37 +477,114 @@ def build_replica_pool(
             if t not in tables and os.path.exists(src):
                 os.symlink(src, os.path.join(d, f"{t}.parquet"))
         combo_dirs[(tables, rep)] = d
-    return root, combo_dirs
+    return combo_dirs
 
 
-def _cpu_ticks() -> "tuple[int, int] | None":
-    """(steal_ticks, total_ticks) from /proc/stat — the r14/r15 verdicts
-    adjudicated bench drift by hand-correlating vmstat logs; sampling
-    steal around the run makes every record carry its own evidence."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        # user nice system idle iowait irq softirq steal ...
-        return (vals[7] if len(vals) > 7 else 0, sum(vals))
-    except (OSError, ValueError, IndexError):
-        return None
+def steal_pct(ticks0: tuple[int, int], ticks1: tuple[int, int]) -> float:
+    """Machine-wide mean steal % between two perfbench ``cpu_ticks()``
+    samples — the drift evidence a run record carries for itself."""
+    d_all = ticks1[0] - ticks0[0]
+    return round(100.0 * (ticks1[1] - ticks0[1]) / d_all, 2) if d_all else 0.0
+
+
+def check_bench_lists(catalog, only=()) -> None:
+    """Fail loudly on a bench list that names something the run would skip:
+    every HEADLINE / AMORTIZED / EAGER_DERIVE name must be a catalog entry,
+    every AMORTIZED / EAGER_DERIVE name and every ``only`` name (the
+    SPARK_GRAFT_ONLY subset) must be a headline entry."""
+    for label, names, universe in (
+        ("HEADLINE", HEADLINE, catalog),
+        ("AMORTIZED", AMORTIZED, catalog),
+        ("EAGER_DERIVE", EAGER_DERIVE, catalog),
+        ("AMORTIZED", AMORTIZED, HEADLINE),
+        ("EAGER_DERIVE", EAGER_DERIVE, HEADLINE),
+        ("SPARK_GRAFT_ONLY", only, HEADLINE),
+    ):
+        bad = sorted(set(names) - set(universe))
+        if bad:
+            kind = "catalog" if universe is catalog else "headline"
+            raise ValueError(f"{label} names no {kind} entry: {', '.join(bad)}")
+
+
+def reruns_fn(entry) -> bool:
+    """True when the entry's fn() does the measured work itself, so every
+    run must call it: streaming entries run their whole job inside fn(),
+    and the CTAS entry materializes its table there (the CTAS is part of
+    what the reference's 864K rec/s CTAS figure measures)."""
+    return bool({"streaming", "ctas"} & set(entry.tags))
+
+
+class Timing(NamedTuple):
+    walls: list[float]
+    #: untimed derive wall; None when the entry re-runs fn() per run
+    derive: float | None
+    #: a Spark job ran during the derive and the entry is not EAGER_DERIVE
+    flagged: bool
+    #: the DataFrame the last run executed (rows for an A/B check)
+    df: Any
+
+
+def time_entry(spark, catalog, name: str, sf_dir: str, runs: int) -> Timing:
+    """The bench's timing loop for one catalog entry: derive the DataFrame
+    ONCE, then execute it ``runs`` times to the noop sink (write-to-noop
+    materializes every row without a driver collect).
+
+    Run 1 pays Catalyst analysis + codegen; later runs are the warm-engine
+    steady state. That is the quantity the reference's loop benchmarks
+    measure: they parse and compile the query once, then loop records
+    through the compiled plan; re-deriving per iteration would time OUR
+    cold path against THEIR warm one. Entries for which ``reruns_fn``
+    holds call fn() per run instead.
+
+    The warm-plan exclusion is verifiable, not conventional: the derive
+    runs inside its own job group and any Spark JOB observed during it
+    (eager execution hiding in fn(), as opposed to driver-side Catalyst
+    analysis) flags the entry unless it is declared in EAGER_DERIVE.
+    Tables are pre-registered first (untimed) so first-touch parquet
+    listing/schema metadata jobs don't masquerade as eager work."""
+    from velostream_spark.session import load_tables
+
+    entry = catalog[name]
+    prebuilt, derive, flagged = None, None, False
+    if not reruns_fn(entry):
+        load_tables(spark, sf_dir, register_views=True)
+        group = f"derive-{name}"
+        spark.sparkContext.setJobGroup(group, f"derive {name}")
+        t0 = time.perf_counter()
+        prebuilt = entry.fn(spark, sf_dir)
+        derive = time.perf_counter() - t0
+        spark.sparkContext.setJobGroup("bench-exec", name)
+        tracker = spark.sparkContext.statusTracker()
+        flagged = bool(tracker.getJobIdsForGroup(group)) and name not in EAGER_DERIVE
+    walls: list[float] = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        df = prebuilt if prebuilt is not None else entry.fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        walls.append(time.perf_counter() - t0)
+    return Timing(walls, derive, flagged, df)
 
 
 def main() -> None:
+    from perfbench.run import cpu_ticks, git_head
     from velostream_spark.registry import all_queries
-    from velostream_spark.session import get_session, load_tables
+    from velostream_spark.session import get_session
 
-    ticks0 = _cpu_ticks()
-    spark = get_session("velostream-spark-bench")
-    tracker = spark.sparkContext.statusTracker()
+    # dev-only subset filter (unset in driver runs → full headline list)
+    only = {s for s in os.environ.get("SPARK_GRAFT_ONLY", "").split(",") if s}
     catalog = all_queries()
+    check_bench_lists(catalog, only)
+    selected = [n for n in HEADLINE if not only or n in only]
+
+    ticks0 = cpu_ticks()
+    spark = get_session("velostream-spark-bench")
 
     # Warmup: JVM, codegen, parquet footer caches.
     catalog["group_by_agg"].fn(spark, SF_DIR).count()
 
-    amortized = {q: tr for q, tr in AMORTIZED.items() if q in HEADLINE}
-    pool_root, rep_dirs = build_replica_pool(spark, SF_DIR, set(amortized.values()))
+    pool_root = scratch_root("vs-bench-pool-")
+    # replication factor per amortized entry, declared in the output
+    amortized = {q: rep for q, (_tables, rep) in AMORTIZED.items()}
 
     # Each query runs ≥4 times; we report the MEDIAN of the runs (r11
     # verdict: min-of-2 left the official record noise-dominated — the
@@ -513,14 +599,13 @@ def main() -> None:
     derive: dict[str, float] = {}
     flagged: list[str] = []
     total = 0.0
-    # dev-only subset filter (unset in driver runs → full headline list)
-    only = {s for s in os.environ.get("SPARK_GRAFT_ONLY", "").split(",") if s}
     try:
-        for name in HEADLINE:
-            entry = catalog.get(name)
-            if entry is None or (only and name not in only):
-                continue
-            tables, rep = amortized.get(name, (None, 1))
+        # a subset run builds only the replicas its entries read
+        rep_dirs = build_replica_pool(
+            spark, SF_DIR, {AMORTIZED[n] for n in selected if n in AMORTIZED}, pool_root
+        )
+        for name in selected:
+            tables, rep = AMORTIZED.get(name, (None, 1))
             # amortized entries MUST resolve their combo dir — a silent
             # fallback to the 1× base dir while still dividing by rep
             # would publish a rep×-flattering number
@@ -529,67 +614,15 @@ def main() -> None:
             # jitter can double a single run — they get one extra run on
             # top of the ≥4 every entry now gets (r11 verdict task 2)
             runs = 5 if name.startswith("streaming_") else 4
-            # Batch entries: derive the DataFrame ONCE and execute it per
-            # run — run 1 pays Catalyst analysis + codegen, the min is the
-            # warm-engine steady state. That is the quantity the
-            # reference's loop benchmarks measure: they parse and compile
-            # the query once, then loop records through the compiled plan;
-            # re-deriving the plan per iteration would time OUR cold path
-            # against THEIR warm one. Streaming entries run their job
-            # inside fn(), so they are re-invoked per run as before.
-            # Entries with eager work inside fn() must re-run it per
-            # iteration: streaming entries run their job in fn(); the CTAS
-            # entry materializes its table in fn() (the CTAS is part of
-            # what the reference's 864K rec/s CTAS figure measures).
-            rerun_fn = name.startswith("streaming_") or name in (
-                "dialect_ctas_stream_table_join",
-                # these run their streaming job inside fn()
-                "dialect_asof_stream",
-                "dialect_asof_stream_ss",
-                "dialect_range_stream",
-                "dialect_interval_stream",
-                # runs TWO streaming jobs (enrichment + aggregation) per
-                # fn() call; 16x-amortized like its component jobs (the
-                # 16x scale spot is near-flat — floor-dominated)
-                "dialect_asof_groupby_stream",
-                # the r14 EMIT CHANGES dialect entries run their whole
-                # update-mode streaming job inside fn() too
-                "dialect_groupby_changes_stream",
-                "dialect_tumbling_changes_stream",
-            )
-            prebuilt = None
-            if not rerun_fn:
-                # The warm-plan exclusion is verifiable, not conventional:
-                # the untimed derive runs inside its own job group and any
-                # Spark JOB observed during it (i.e. eager execution hiding
-                # in fn(), as opposed to driver-side Catalyst analysis)
-                # flags the entry in the official JSON ("derive_flagged",
-                # normally empty) unless declared in EAGER_DERIVE. Tables
-                # are pre-registered first (untimed) so first-touch parquet
-                # listing/schema metadata jobs — catalog warm-up, not query
-                # execution — don't masquerade as eager work. Derive walls
-                # are also reported (stderr) next to the execute walls.
-                load_tables(spark, sf_dir, register_views=True)
-                group = f"derive-{name}"
-                spark.sparkContext.setJobGroup(group, f"derive {name}")
-                t0 = time.perf_counter()
-                prebuilt = entry.fn(spark, sf_dir)
-                derive[name] = round(time.perf_counter() - t0, 3)
-                spark.sparkContext.setJobGroup("bench-exec", name)
-                if (
-                    tracker.getJobIdsForGroup(group)
-                    and name not in EAGER_DERIVE
-                ):
-                    flagged.append(name)
-            walls: list[float] = []
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                df = prebuilt if prebuilt is not None else entry.fn(spark, sf_dir)
-                # write-to-noop materializes all rows without driver collect
-                df.write.format("noop").mode("overwrite").save()
-                walls.append(time.perf_counter() - t0)
-            import statistics
-
+            t = time_entry(spark, catalog, name, sf_dir, runs)
+            walls = t.walls
+            # derive walls are reported (stderr) next to the execute walls;
+            # a flagged entry lands in the official JSON ("derive_flagged",
+            # normally empty)
+            if t.derive is not None:
+                derive[name] = round(t.derive, 3)
+            if t.flagged:
+                flagged.append(name)
             med = statistics.median(walls)
             # amortized entries report per-1×-input wall (job ran rep× rows)
             times[name] = round(med / rep, 3)
@@ -601,8 +634,6 @@ def main() -> None:
             # a query's residual memory doesn't tax the queries after it.
             spark.catalog.clearCache()
     finally:
-        import shutil
-
         shutil.rmtree(pool_root, ignore_errors=True)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -619,7 +650,7 @@ def main() -> None:
                 "queries": times,
                 "steady_min_sec": mins,
                 "runs": run_counts,
-                "amortized": {q: r for q, (_t, r) in amortized.items()},
+                "amortized": amortized,
                 "derive_flagged": flagged,
             },
             separators=(",", ":"),
@@ -654,12 +685,10 @@ def main() -> None:
             }
             for q in times
         },
-        "amortized": {q: r for q, (_t, r) in amortized.items()},
+        "amortized": amortized,
         "derive_flagged": flagged,
     }
-    stats_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_STATS.json"
-    )
+    stats_path = os.path.join(ROOT, "BENCH_STATS.json")
     # Cross-run history (r13 verdict task 7, "What's wrong" #3): every
     # FULL bench invocation appends its totals + per-entry medians, so
     # the sidecar carries ALL full-run medians of the round, not only the
@@ -672,15 +701,16 @@ def main() -> None:
                 history = json.load(fh).get("runs_history", [])
         except (OSError, ValueError):
             history = []
-        run_rec = {"total_wall_sec": round(total, 3), "queries": dict(times)}
-        ticks1 = _cpu_ticks()
-        if ticks0 is not None and ticks1 is not None:
-            dsteal, dtotal = ticks1[0] - ticks0[0], ticks1[1] - ticks0[1]
-            if dtotal > 0:
-                # machine-wide mean steal % over the whole invocation —
-                # the drift evidence the verdicts previously pulled from
-                # hand-run vmstat logs
-                run_rec["steal_pct"] = round(100.0 * dsteal / dtotal, 2)
+        # stamped with what tells two runs' environments apart: steal %
+        # over the whole invocation, the local core count, HEAD and sf
+        run_rec = {
+            "total_wall_sec": round(total, 3),
+            "queries": dict(times),
+            "steal_pct": steal_pct(ticks0, cpu_ticks()),
+            "cpus": spark.sparkContext.defaultParallelism,
+            "head": git_head(ROOT),
+            "sf": sf_val,
+        }
         history.append(run_rec)
         sidecar["runs_history"] = history[-8:]
         try:

@@ -9,6 +9,8 @@ its head and nulling the official parse.
 
 import json
 
+import pytest
+
 from bench import LINE_BUDGET, compact_stdout_line
 
 DRIVER_TAIL = 2000  # the driver captures stdout[-2000:]
@@ -108,3 +110,35 @@ def test_real_catalog_names_headroom():
         assert min(kept.values()) >= max(round(times[q], 2) for q in elided)
     top10 = sorted(times, key=lambda q: -times[q])[:10]
     assert all(q in kept for q in top10)
+
+
+def test_bench_lists_name_headline_catalog_entries():
+    # every name in HEADLINE / AMORTIZED / EAGER_DERIVE is one the run
+    # times; a subset naming a headline entry passes too
+    import bench as bench_mod
+    from velostream_spark.registry import all_queries
+
+    bench_mod.check_bench_lists(all_queries(), {"select_where"})
+
+
+@pytest.mark.parametrize(
+    "label, patch, only, bad",
+    [
+        ("HEADLINE", {"HEADLINE": ["select_where", "no_such_entry"]}, (), "no_such_entry"),
+        ("AMORTIZED", {"AMORTIZED": {"no_such_entry": (("events",), 16)}}, (), "no_such_entry"),
+        ("EAGER_DERIVE", {"EAGER_DERIVE": {"no_such_entry"}}, (), "no_such_entry"),
+        # catalog entries the headline list does not time
+        ("AMORTIZED", {"AMORTIZED": {"prometheus_metrics": (("events",), 16)}}, (),
+         "prometheus_metrics"),
+        ("EAGER_DERIVE", {"EAGER_DERIVE": {"prometheus_metrics"}}, (), "prometheus_metrics"),
+        ("SPARK_GRAFT_ONLY", {}, {"select_whre"}, "select_whre"),
+    ],
+)
+def test_unknown_bench_name_raises(monkeypatch, label, patch, only, bad):
+    import bench as bench_mod
+    from velostream_spark.registry import all_queries
+
+    for attr, value in patch.items():
+        monkeypatch.setattr(bench_mod, attr, value)
+    with pytest.raises(ValueError, match=f"{label} names no .*{bad}"):
+        bench_mod.check_bench_lists(all_queries(), only)

@@ -776,7 +776,7 @@ def test_sketch_twins_hll_branch_is_object_hash_binary_buffer(spark):
     # column buffer inlined into HashAggregate rows ("Aggregate
     # Attributes [3278]" in plans/r15/approx_count_distinct_before.txt,
     # 26 KB-wide shuffle rows; branch measured 1.62 s -> 0.245 s at
-    # sf0.1, tools/hll_spot.py)
+    # sf0.1, OPTIMIZATION_r15.md §1)
     for name in (
         "approx_count_distinct",
         "hypertable_rollup_approx",

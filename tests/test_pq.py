@@ -280,10 +280,10 @@ def test_residual_encoding_and_8bit_codes_lift_clustered_recall(spark):
        margin — within-cluster ranking is quantization-limited, and 256
        codes/subspace (FAISS's default, still 8 B/vector) is the knob.
 
-    Mirrors tools/recall_spot.py's clustered table at a smaller n."""
+    Mirrors PERF.md's clustered recall table (round 10) at a smaller n."""
     from collections import defaultdict
 
-    from tools.recall_spot import clustered_embeddings
+    from tools.fixtures import clustered_embeddings
     from velostream_spark.operators import pq, similarity
 
     emb = clustered_embeddings(spark, n=1000, k=16, dim=64, seed=7)

@@ -50,14 +50,6 @@ def test_sized_partitions_small_input_and_restore(spark):
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == session_n
 
 
-def test_sized_partitions_respects_disable_env(spark, monkeypatch):
-    monkeypatch.setattr(runner, "_TARGET_PART_BYTES", -1)
-    session_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sdf = stream_table(spark, SF_SMOKE, "events")
-    with runner.bounded_run_scope(sdf):
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == session_n
-
-
 def test_sized_partitions_large_input_keeps_session_value(spark, monkeypatch):
     # cluster regime: bytes/target >> session partitions → conf untouched
     monkeypatch.setattr(runner, "_TARGET_PART_BYTES", 1)
@@ -106,12 +98,6 @@ def test_local_ckpt_file_manager_set_and_restored(spark):
         spark.conf.unset(runner._FM_CONF)
 
 
-def test_local_ckpt_file_manager_respects_disable_env(spark, monkeypatch):
-    monkeypatch.setattr(runner, "_LOCAL_CKPT_FM", False)
-    with runner.bounded_run_scope(stream_table(spark, SF_SMOKE, "events")):
-        assert spark.conf.get(runner._FM_CONF, None) is None
-
-
 def test_unloadable_fs_manager_keeps_default_and_warns_once(
     spark, monkeypatch, caplog
 ):
@@ -131,8 +117,9 @@ def test_unloadable_fs_manager_keeps_default_and_warns_once(
     assert len(warned) == 1
 
 
-def test_bounded_run_results_identical_under_fs_manager(spark):
-    # same stateful job, default vs FileSystem-based manager → identical rows
+def test_bounded_run_results_identical_under_fs_manager(spark, monkeypatch):
+    # same stateful job, default vs FileSystem-based manager → identical
+    # rows; the default-manager arm is the unloadable-candidate path
     from velostream_spark.streaming.runner import run_available_now
 
     def run():
@@ -145,11 +132,12 @@ def test_bounded_run_results_identical_under_fs_manager(spark):
         return {tuple(r) for r in out.collect()}
 
     with_fm = run()
+    monkeypatch.setattr(runner, "_FM_CANDIDATES", ("com.example.NoSuchManager",))
+    runner._fs_ckpt_manager.cache_clear()
     try:
-        runner._LOCAL_CKPT_FM = False
         without_fm = run()
     finally:
-        runner._LOCAL_CKPT_FM = True
+        runner._fs_ckpt_manager.cache_clear()
     assert with_fm == without_fm and len(with_fm) > 0
 
 

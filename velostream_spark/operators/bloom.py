@@ -149,7 +149,7 @@ def bloom_anti_join(
     and both branches read the staged partitions. Leave False when the
     key is a STORED column (the 100-TB shape — fingerprints land in the
     table) or A's projection is cheap: two pushdown scans of stored
-    columns beat a checkpoint write. Measured (tools/bloom_spot.py, 128x/
+    columns beat a checkpoint write. Measured (PERF.md Round-11, 128x/
     512x): derived keys 13.90/53.2 s -> staged 11.62/49.3 s -> stored
     column 10.29/42.7 s; full table in PERF.md."""
     from velostream_spark.operators.textops import gate_rows

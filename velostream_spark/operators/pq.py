@@ -40,15 +40,16 @@ the corpus un-shuffled, and is the exact shape `ivf_topk` already uses.
 
 RESIDUAL encoding (``ivf_pq_residual_topk``, Jégou §IV.A / FAISS
 IndexIVFPQ): quantize ``vec - centroid(cell)`` instead of the raw vector.
-The clustered-corpus fixture (tools/recall_spot.py) measured why this is
-the production form: raw-vector PQ spends its codes re-describing the
-coarse cell location, collapsing tight clusters to identical code tuples
-(trained raw codebook recall@10 0.076 on the MoG corpus — WORSE than the
-fixture's 0.126); residuals + 8-bit sub-quantizers (``n_codes=256``,
-FAISS's default, still 8 B of code per vector) reach 0.456 vs 0.408 for
-raw 8-bit. On structureless random data residuals HURT (0.236 vs 0.370 —
-the "cells" are arbitrary, so subtracting them adds noise): residual
-encoding helps exactly when the coarse quantizer captures real structure.
+The clustered-corpus fixture (PERF.md, ANN recall, round 10) measured
+why this is the production form: raw-vector PQ spends its codes
+re-describing the coarse cell location, collapsing tight clusters to
+identical code tuples (trained raw codebook recall@10 0.076 on the MoG
+corpus — WORSE than the fixture's 0.126); residuals + 8-bit
+sub-quantizers (``n_codes=256``, FAISS's default, still 8 B of code per
+vector) reach 0.456 vs 0.408 for raw 8-bit. On structureless random data
+residuals HURT (0.236 vs 0.370 — the "cells" are arbitrary, so
+subtracting them adds noise): residual encoding helps exactly when the
+coarse quantizer captures real structure.
 """
 
 from __future__ import annotations
@@ -443,8 +444,8 @@ def pq_train_codebook(
     (codes still one small int, the index still n_codes·dim floats).
 
     Approximate by design (k-means is not SQL-expressible) → no DuckDB
-    oracle; quality is measured in tools/recall_spot.py and the recall
-    gain over the fixture codebook is pinned in tests/test_pq.py."""
+    oracle; quality is recorded in PERF.md (ANN recall, round 10) and the
+    recall gain over the fixture codebook is pinned in tests/test_pq.py."""
     import numpy as np
 
     from pyspark.ml.clustering import KMeans
@@ -559,10 +560,10 @@ def pq_train_residual_codebook(
     On clustered corpora raw-vector PQ collapses (per-subspace centers sit
     on the cluster centers, so every within-cluster vector gets the same
     code tuple and ADC cannot rank inside a cluster — measured in
-    tools/recall_spot.py); residuals remove the cluster mean first, so the
-    16 codes/subspace spend their resolution on the WITHIN-cluster
-    structure top-k actually ranks. Distributed: one Arrow residual pass +
-    the same per-subspace MLlib fits as pq_train_codebook."""
+    PERF.md, ANN recall, round 10); residuals remove the cluster mean
+    first, so the 16 codes/subspace spend their resolution on the
+    WITHIN-cluster structure top-k actually ranks. Distributed: one Arrow
+    residual pass + the same per-subspace MLlib fits as pq_train_codebook."""
     return pq_train_codebook(
         ivf_residuals(emb, centroids, vec_col, id_col),
         vec_col="residual",

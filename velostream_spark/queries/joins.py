@@ -495,7 +495,7 @@ def hypertable_rollup_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     form carried a 1639-long-column fixed buffer per sketch through the
     rollup aggregate and its Exchange; the Datasketches form is one
     growable binary buffer per stratum via ObjectHashAggregate, branch
-    measured 1.10 → 0.30 s at sf0.1, tools/hll_spot.py) so the distinct
+    measured 1.10 → 0.30 s at sf0.1, OPTIMIZATION_r15.md §1) so the distinct
     term — the exact form's ONLY corpus-scale shuffle, one row per
     distinct (stratum, user) per grouping set, measured as the dominant
     growing term at the 512x spot — carries ONE fixed-size sketch per

@@ -312,7 +312,8 @@ def _decontam_oracle(n_centroids: int = 8, threshold: float = 0.3) -> str:
 #: Broadcast ceiling for the decontamination gate's benchmark set, in
 #: ROWS (the deciding quantity: every task probes |B∩cell| vectors; at
 #: dim=64 float64 a row is ~0.5 KB in the hash relation). MEASURED in
-#: tools/decontam_ceiling.py (r12 verdict task 7; full table in PERF.md):
+#: PERF.md Round-13 (full table; re-measure one factor with
+#: `tools/ab.py streaming_decontam_gate --b-dir decontam:128`):
 #: broadcast ≈ shuffled at 6.4K rows (5.7 vs 5.1 s), broadcast 1.6×
 #: WORSE at 51K rows / 26 MB (45.3 vs 28.5 s) and 3.5× worse at 205K
 #: rows / 105 MB (189 vs 54 s) — the broadcast hash relation's per-probe
@@ -909,7 +910,7 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ with RESIDUAL encoding (Jégou §IV.A / FAISS IndexIVFPQ):
     PQ codes quantize ``vec - centroid(cell)`` and ADC tables are built
     per probed cell from the query's residual. The clustered-corpus
-    recall fixture (tools/recall_spot.py) showed WHY this is the
+    recall fixture (PERF.md, ANN recall, round 10) showed WHY this is the
     production form: raw-vector PQ collapses every member of a tight
     cluster to the same code tuple (16 codes/subspace re-describe the
     coarse location), recall@10 0.126 — residual encoding spends those

@@ -1559,7 +1559,7 @@ def corpus_stats_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer per sketch through the rollup aggregate, the Datasketches
     form is one growable binary buffer per stratum via
     ObjectHashAggregate, branch measured 0.71 → 0.14 s at sf0.1,
-    tools/hll_spot.py) so the distinct shuffle
+    OPTIMIZATION_r15.md §1) so the distinct shuffle
     carries ONE fixed-size HLL sketch per (grouping set × stratum) —
     kilobytes — instead of the exact form's one row per distinct
     fingerprint per grouping set (corpus-scale). HLL estimates differ
@@ -1684,7 +1684,7 @@ def cross_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stage_a=True`` because the fingerprint is DERIVED here (md5 over a
     regex-normalized text column — expensive to evaluate twice, once per
     output branch): measured 13.90 -> 11.62 s at the 128x spot and
-    53.2 -> 49.3 s at 512x (tools/bloom_spot.py). A STORED fingerprint
+    53.2 -> 49.3 s at 512x (PERF.md Round-11). A STORED fingerprint
     column — the 100-TB shape — beats both (10.29 / 42.70 s) with
     stage_a left False; table in PERF.md."""
     from velostream_spark.operators import bloom
@@ -1834,8 +1834,8 @@ def _tfidf_topk_terms(spark: SparkSession, sf_dir: str, strategy: str) -> DataFr
         # (plans/r16/tfidf_topk_terms_before.txt nodes 5+7); this trades
         # them for ONE exchange of the un-combined token occurrences
         # (plans/r16/..._after.txt: corpus exchanges 3 → 2). Interleaved
-        # A/B at sf0.1: med 0.649 → 0.607 s (tools/onex_spot.py — modest
-        # here where fixed costs dominate; the win scales with the
+        # A/B at sf0.1: med 0.649 → 0.607 s (OPTIMIZATION_r16.md task 2 —
+        # modest here where fixed costs dominate; the win scales with the
         # removed full-|tf| exchange). Skew ceiling unchanged: the df
         # window already put each word's full posting in one task.
         tf = (
@@ -2078,7 +2078,7 @@ def _bigram_lm_score(spark: SparkSession, sf_dir: str, strategy: str) -> DataFra
         # cp window (plans/r16/bigram_lm_score_before.txt; after: corpus
         # exchanges 4 → 2 counting the final doc agg). Interleaved A/B at
         # sf0.1 incl. the V-branch change below: med 1.013 → 0.893 s
-        # (tools/onex_spot.py). Skew ceiling unchanged — the cp window
+        # (OPTIMIZATION_r16.md task 4). Skew ceiling unchanged — the cp window
         # already put each prev's full posting in one task (that boundary
         # is what routes to the join twin).
         tfb = bg.repartition("prev").groupBy("doc_id", "prev", "cur").agg(

@@ -528,7 +528,7 @@ def approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     growable binary buffer per group via ObjectHashAggregate (sparse
     below ~thousands of distincts, ≤12 KB dense). Same estimator family,
     same precision class, identical emitted columns; branch measured
-    1.62 s → 0.245 s at sf0.1 (tools/hll_spot.py)."""
+    1.62 s → 0.245 s at sf0.1 (OPTIMIZATION_r15.md §1)."""
     t = tables(spark, sf_dir)
     tol = 4 * 0.01
 

@@ -41,11 +41,8 @@ _COUNTER = itertools.count()
 #: session's own shuffle-partition setting: a corpus-scale input always
 #: yields >= the configured parallelism, so cluster behavior is the
 #: session default, unchanged — only small bounded runs stop paying for
-#: empty state stores. Override the target via
-#: $VS_STREAM_TARGET_PART_BYTES (bytes; "-1" disables the sizing).
-_TARGET_PART_BYTES = int(
-    os.environ.get("VS_STREAM_TARGET_PART_BYTES", str(4 * 1024 * 1024))
-)
+#: empty state stores.
+_TARGET_PART_BYTES = 4 * 1024 * 1024
 
 def _stream_input_bytes(sdf: DataFrame) -> "int | None":
     """Total bytes of the local file sources feeding ``sdf``, read from
@@ -104,8 +101,8 @@ def _stream_input_bytes(sdf: DataFrame) -> "int | None":
 #: it on every run — ~40 ms per metadata op (latestOffset / walCommit /
 #: commitOffsets) and most of a stateful commit. Spark's own
 #: FileSystemBasedCheckpointFileManager goes through the process-wide
-#: FileSystem cache instead: interleaved same-session A/B
-#: (tools/ckpt_fm_spot.py) measured the metadata trio 42/41/42 → 9/9/9 ms
+#: FileSystem cache instead: interleaved same-session A/B (PERF.md
+#: Round-16) measured the metadata trio 42/41/42 → 9/9/9 ms
 #: and whole-job walls 0.57 → 0.40 s (stateless) / 1.10 → 0.71 s
 #: (stateful dropDuplicates). What the FileContext manager adds is a
 #: rename that never overwrites, which matters only against a second,
@@ -113,8 +110,7 @@ def _stream_input_bytes(sdf: DataFrame) -> "int | None":
 #: checkpoint under a root this process created with mkdtemp — the
 #: runner's scratch dirs, a StreamJobManager built without a
 #: checkpoint_root — has no such writer, PAUSE/RESUME included; a
-#: caller-supplied root keeps Spark's default. Disable via
-#: $VS_STREAM_LOCAL_CKPT_FM=0.
+#: caller-supplied root keeps Spark's default.
 _FM_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 #: Spark 4.x moved the class into the checkpointing package; 3.x keeps it
 #: in streaming. The first one this JVM can load wins.
@@ -123,7 +119,6 @@ _FM_CANDIDATES = (
     "FileSystemBasedCheckpointFileManager",
     "org.apache.spark.sql.execution.streaming.FileSystemBasedCheckpointFileManager",
 )
-_LOCAL_CKPT_FM = os.environ.get("VS_STREAM_LOCAL_CKPT_FM", "1") != "0"
 _SHUFFLE_CONF = "spark.sql.shuffle.partitions"
 
 #: Serialises set → start() → restore: two overlapping scopes would
@@ -172,16 +167,8 @@ def bounded_run_scope(
     Set and restore happen under one module lock. A batch query planned
     on the same session while ``start()`` runs still sees the override."""
     spark = sdf.sparkSession
-    n_bytes = (
-        _stream_input_bytes(sdf)
-        if available_now and _TARGET_PART_BYTES > 0
-        else None
-    )
-    fm = (
-        _fs_ckpt_manager(_FM_CANDIDATES)
-        if own_checkpoint and _LOCAL_CKPT_FM
-        else None
-    )
+    n_bytes = _stream_input_bytes(sdf) if available_now else None
+    fm = _fs_ckpt_manager(_FM_CANDIDATES) if own_checkpoint else None
     with _SCOPE_LOCK:
         prev = {
             _SHUFFLE_CONF: spark.conf.get(_SHUFFLE_CONF),
